@@ -221,24 +221,9 @@ simhashes AS (
 # Several queries (minhash_lsh_pairs, dup_clusters_cc, cluster_chains,
 # session_predicates, business_view_enriched) consume the same verified
 # edge set — materialize it once per (application, sf_dir), exactly like
-# the pipeline's checkpointed candidate_edges stage table. r6: the CC
-# labels over those edges are shared the same way (dup_clusters_cc and
-# cluster_chains consume the identical label table — the pipeline's
-# cluster_labels stage). The labels cache lives and dies WITH the
-# verified cache: clearing one clears both, so the frozen bench's
-# per-pass `_VERIFIED_CACHE.clear()` keeps every pass independent —
-# within a pass the battery shares checkpointed stage tables exactly
-# like a real run (first consumer pays), never across passes or runs.
-_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-class _SharedStageCache(dict):
-    def clear(self) -> None:  # the bench clears per pass; labels follow
-        super().clear()
-        _LABELS_CACHE.clear()
-
-
-_VERIFIED_CACHE: dict[tuple[str, str], DataFrame] = _SharedStageCache()
+# the pipeline's checkpointed candidate_edges stage table. The frozen
+# bench clears it per pass, so passes stay independent.
+_VERIFIED_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -247,9 +232,11 @@ def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     if key not in _VERIFIED_CACHE:
         docs = _t(spark, sf_dir, "documents")
         sigs = with_minhash(docs, CFG, id_col="doc_id", text_col="text")
-        cands = candidate_pairs(band_table(sigs, CFG), CFG)
+        # the band self-join expands its input once per side: materialize
+        # the bands so the Arrow signature kernel runs once, not per side
+        bands = band_table(sigs, CFG).localCheckpoint()
         verified = verify_candidates(
-            cands, docs, id_col="doc_id", text_col="text",
+            candidate_pairs(bands, CFG), docs, id_col="doc_id", text_col="text",
             threshold=CFG.jaccard_threshold, shingle_k=CFG.shingle_k, fold=ASCII_FOLD,
             candidates_distinct=True,  # candidate_pairs ends in distinct()
         )
@@ -263,17 +250,14 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     CC is type-preserving — long node ids shuffle as longs (half the width
     of the round-1 zero-padded strings) and component = numeric min member
     (matches the SQL oracle's least())."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LABELS_CACHE:
-        docs = _t(spark, sf_dir, "documents")
-        edges = _lsh_verified_pairs(spark, sf_dir).select("src", "dst")
-        labels = connected_components(edges, cfg=CFG)
-        labels = attach_singletons(labels, docs.select(F.col("doc_id").alias("doc")), "doc")
-        _LABELS_CACHE[key] = labels.select(
-            F.col("node").alias("doc_id"),
-            F.col("component").alias("cluster_id"),
-        ).localCheckpoint()
-    return _LABELS_CACHE[key]
+    docs = _t(spark, sf_dir, "documents")
+    edges = _lsh_verified_pairs(spark, sf_dir).select("src", "dst")
+    labels = connected_components(edges, cfg=CFG)
+    labels = attach_singletons(labels, docs.select(F.col("doc_id").alias("doc")), "doc")
+    return labels.select(
+        F.col("node").alias("doc_id"),
+        F.col("component").alias("cluster_id"),
+    )
 
 
 _SQL_CC = f"""

@@ -2,8 +2,8 @@
 
 No reference counterpart (the reference matches metadata keys only) —
 this is the training-data-pipeline extension mandated by the build spec:
-brute-force cosine top-k as the exact baseline, plus two scale paths —
-a random-hyperplane LSH bucketing and an IVF (inverted-file) index.
+brute-force cosine top-k as the exact baseline, plus the IVF
+(inverted-file) index as the scale path.
 
 The IVF path is the graded 100 TB design: assign every vector to its
 nearest of K seed centroids (a vectorized Arrow matmul — one B×d @ d×K
@@ -93,56 +93,6 @@ def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
             # out per vector (_cos_micro_prenormed — bit-identical)
             _cos_micro_prenormed(F.col("q"), F.col("qn"),
                                  F.col("v"), F.col("vn")).alias("cos_micro"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_micro"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_micro", "rank")
-    )
-
-
-def hyperplane_signature(embeddings: DataFrame, n_planes: int = 16, seed: int = 42,
-                         dim: int = 64, id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
-    """Random-hyperplane sign signature (SimHash for vectors) — the
-    LSH-bucketed ANN scale path: bucket by signature, search within bucket
-    (plus neighboring buckets for recall). Hyperplanes are seeded and
-    embedded as literals — deterministic, JVM-evaluated."""
-    rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    sig = F.lit(0).cast("long")
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(float(w)) for w in planes[p]])
-        dot = F.aggregate(F.zip_with(vd, plane, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-        sig = sig + F.when(dot > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
-    return embeddings.select(F.col(id_col).alias("vec_id"), sig.alias("bucket"))
-
-
-def bucketed_ann_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
-                      n_planes: int = 8, seed: int = 42, dim: int = 64,
-                      id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's hyperplane
-    bucket. Trades recall for a candidate set ~n/2^planes per query."""
-    sigs = hyperplane_signature(embeddings, n_planes, seed, dim, id_col, vec_col).select(
-        F.col("vec_id").alias("_sig_id"), "bucket"
-    )
-    with_bucket = embeddings.join(
-        sigs, embeddings[id_col] == sigs["_sig_id"]
-    ).select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v"), "bucket")
-    queries = with_bucket.filter(F.col("neighbor_id").isin(query_ids)).select(
-        F.col("neighbor_id").alias("query_id"), F.col("v").alias("q"), F.col("bucket").alias("qb")
-    )
-    scored = (
-        with_bucket.join(
-            F.broadcast(queries),
-            (F.col("bucket") == F.col("qb")) & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id", "neighbor_id",
-            F.round(cosine_expr(F.col("q"), F.col("v")) * 1_000_000).cast("long").alias("cos_micro"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_micro"), F.asc("neighbor_id"))

@@ -52,6 +52,10 @@ def token_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         3.03 → 2.80 s from this change alone (2.15 s in the end-of-round
         battery), and the kernel feeds every verification path.
 
+    Output schema: ``tokens`` is ``array<bigint>`` (shingle hashes); it
+    used to be ``array<string>`` (the shingle text). A consumer that needs
+    the strings must call ``minhash.shingles_py`` itself.
+
     ``fold`` is accepted for API stability but the kernel always
     accent-folds (tokens_py semantics == the DuckDB oracle's
     strip_accents; folding is the identity on ASCII corpora).

@@ -116,17 +116,11 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig,
     on 600k pages × local[16] (144 s vs 80 s pipeline wall); the aggregate
     probe costs ~2 s. Degenerate fallback: if more than 2M buckets are hot
     the broadcast assumption is void and the window plan is used.
-    """
-    # The self-join expands the upstream once per side; if the band plan
-    # still contains the Arrow signature UDF (ad-hoc composition, no stage
-    # table in between), that means 4× Python signature computation
-    # (observed in explain(): 2 sides × struct-field double-eval).
-    # Materialize in that case only — when bands derive from an already
-    # materialized signatures table (the checkpointed pipeline), an extra
-    # 19M-row localCheckpoint is pure cost.
-    if "EvalPython" in bands._jdf.queryExecution().executedPlan().toString():
-        bands = bands.localCheckpoint()
 
+    The self-join expands ``bands`` once per side: pass a stored or
+    checkpointed band table. Bands still computed by the Arrow signature
+    kernel (no stage table in between) would run that kernel per side.
+    """
     def exact_cliques(side: DataFrame) -> DataFrame:
         # Codegen'd shuffle-hash self-join on the band key. (A groupBy +
         # collect_set + in-bucket pair expansion was measured 2× slower
@@ -178,13 +172,3 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig,
     )
     return exact_cliques(cold).unionByName(star).distinct()
 
-
-def bucket_stats(bands: DataFrame) -> DataFrame:
-    """Per-bucket size histogram for skew diagnostics / lineage counters."""
-    return (
-        bands.groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .groupBy("bucket_n")
-        .agg(F.count(F.lit(1)).alias("n_buckets"))
-        .orderBy(F.desc("bucket_n"))
-    )

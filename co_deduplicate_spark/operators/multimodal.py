@@ -7,8 +7,7 @@ feature-extraction steps are Arrow-batched ``mapInPandas`` operators.
 Decode coverage in this environment (no codec libraries in the container):
 
 * REAL pure-numpy decode paths, no stub: uncompressed 24-bit BI_RGB
-  **BMP** (full pixel array → channel stats + 3×3 luminance grid features,
-  nearest-neighbor resize) and mono/stereo 16-bit PCM **WAV** (sample
+  **BMP** (full pixel array → channel stats + 3×3 luminance grid features) and mono/stereo 16-bit PCM **WAV** (sample
   array → RMS/ZCR/8-band rFFT spectrum features). Golden-value tested
   (tests/test_multimodal_decode.py).
 * Header-only parsing for **PNG/JPEG** (dimensions from the bytestream) —
@@ -319,34 +318,6 @@ def audio_sample_stats(media: DataFrame, id_col: str = "media_id",
     return media.select(id_col, blob_col).mapInPandas(op, schema=AUDIO_STATS_SCHEMA)
 
 
-RESIZE_SCHEMA = "media_id long, thumb_w int, thumb_h int, thumb array<int>"
-
-
-def resize_bmp(media: DataFrame, thumb_w: int = 8, thumb_h: int = 8,
-               id_col: str = "media_id", blob_col: str = "blob") -> DataFrame:
-    """Nearest-neighbor thumbnail of decodable BMPs (row-major RGB triples
-    packed as ints) — the resize step of the media pipeline, real pixels.
-    Non-decodable blobs are dropped (count them upstream via
-    decode_image_meta.valid)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                px = _bmp_decode(bytes(blob) if blob is not None else b"")
-                if px is None:
-                    continue
-                h, w = px.shape[:2]
-                yi = (np.arange(thumb_h) * h) // thumb_h
-                xi = (np.arange(thumb_w) * w) // thumb_w
-                thumb = px[yi][:, xi].reshape(-1).astype(np.int32)
-                rows.append({"media_id": int(mid), "thumb_w": thumb_w,
-                             "thumb_h": thumb_h, "thumb": thumb.tolist()})
-            yield pd.DataFrame(rows, columns=["media_id", "thumb_w", "thumb_h", "thumb"])
-
-    return media.select(id_col, blob_col).mapInPandas(op, schema=RESIZE_SCHEMA)
-
-
 def encode_video(frames: list[np.ndarray]) -> bytes:
     """Frame container: concatenated BMPs. Deliberately minimal but REAL —
     each BMP header carries its total file size (bytes 2:6), so a decoder
@@ -481,18 +452,3 @@ def synth_media_blobs(ids: DataFrame, id_col: str = "media_id",
                                 "blob": blobs})
 
     return ids.select(id_col).mapInPandas(op, schema="media_id long, blob binary")
-
-
-def exact_media_dedup(media: DataFrame, id_col: str = "media_id",
-                      blob_col: str = "blob") -> DataFrame:
-    """Exact media dedup: group by content hash — same hash-groupBy shape
-    as text exact dedup (operators/exact.py), binary-safe."""
-    return (
-        media.select(F.col(id_col), F.sha2(F.col(blob_col), 256).alias("content_key"))
-        .groupBy("content_key")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(id_col).alias("keep_id"),
-            F.array_sort(F.collect_list(F.col(id_col))).alias("members"),
-        )
-    )

@@ -171,16 +171,11 @@ def hamming_pairs(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     ``bit_count(s1 ^ s2)`` — whole-stage codegen, no Python. The result
     set is identical under either blocking; only candidate volume differs.
     """
-    # r6 (guide §4, the lsh.candidate_pairs guard): the self-join below
-    # expands the signature plan once per side — if it still contains the
-    # Arrow simhash kernel (ad-hoc composition, no stage table in
-    # between), every doc would pay the md5-shingle loop TWICE.
-    # Materialize the (doc, simhash) table once in that case only; when
-    # sigs is already a stored/checkpointed table the extra copy is pure
-    # cost. Measured: simhash_hamming_pairs 3.85 → 2.6 s at sf0.1, and
-    # the multi-engine pipeline's simhash engine the same way.
-    if "EvalPython" in sigs._jdf.queryExecution().executedPlan().toString():
-        sigs = sigs.localCheckpoint()
+    # the self-join below expands the signature plan once per side; every
+    # caller passes a live with_simhash plan, so materialize the (doc,
+    # simhash) table once instead of paying the md5-shingle loop TWICE per
+    # doc. Measured: simhash_hamming_pairs 3.85 → 2.6 s at sf0.1.
+    sigs = sigs.localCheckpoint()
     keyed = (
         sigs.filter(F.col("simhash").isNotNull())
         .select("doc", "simhash",
@@ -200,25 +195,3 @@ def hamming_pairs(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
         .distinct()
     )
 
-
-def duckdb_simhash_sql(docs_rel: str, id_sql: str, shingles_sql: str, bits: int = 60) -> str:
-    """DuckDB SQL computing the identical shingle-simhash per doc
-    (``shingles_sql`` must produce the distinct k-shingle list mirroring
-    minhash.shingles_py)."""
-    return f"""
-    WITH toks AS (
-      SELECT {id_sql} AS doc, unnest({shingles_sql}) AS t
-      FROM {docs_rel}
-    ),
-    hashed AS (
-      SELECT doc, ('0x' || substr(md5(t), 1, {bits // 4}))::BIGINT AS h FROM toks
-    ),
-    votes AS (
-      SELECT doc, b.b AS b,
-             sum(CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-      FROM hashed, (SELECT unnest(range({bits})) AS b) b
-      GROUP BY doc, b.b
-    )
-    SELECT doc, sum(CASE WHEN v > 0 THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS simhash
-    FROM votes GROUP BY doc
-    """

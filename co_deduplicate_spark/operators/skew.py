@@ -43,16 +43,6 @@ def salted_count(df: DataFrame, keys: list[str], disambiguator: Column,
     return partial.groupBy(*keys).agg(F.sum("_partial").alias("count"))
 
 
-def salted_sum(df: DataFrame, keys: list[str], value_col: str, disambiguator: Column,
-               n_salts: int = 16) -> DataFrame:
-    partial = (
-        with_salt(df, disambiguator, n_salts)
-        .groupBy(*keys, "_salt")
-        .agg(F.sum(value_col).alias("_partial"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("_partial").alias(f"sum_{value_col}"))
-
-
 def salted_collect_set(df: DataFrame, keys: list[str], value_col: str,
                        disambiguator: Column, n_salts: int = 16) -> DataFrame:
     """array_sort(collect_set(value)) per key, salt-spread.
@@ -97,14 +87,3 @@ def salted_collect_sets(df: DataFrame, keys: list[str], value_cols: list[str],
         ],
         F.sum("_p_n").alias("count"),
     )
-
-
-def broadcast_salted_join(big: DataFrame, small: DataFrame, key: str,
-                          n_salts: int = 16) -> DataFrame:
-    """Static skew-join fallback for when AQE is unavailable: replicate the
-    small side across n_salts salt values, salt the big side
-    deterministically, join on (key, salt). Row-identical to a plain inner
-    join on ``key``."""
-    salted_big = big.withColumn("_salt", F.pmod(F.xxhash64(*big.columns), F.lit(n_salts)))
-    replicated = small.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-    return salted_big.join(replicated, [key, "_salt"]).drop("_salt")

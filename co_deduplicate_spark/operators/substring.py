@@ -161,18 +161,13 @@ def suffix_window_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str =
         docs.select(F.col(id_col).alias("doc"), wk(F.col(text_col)).alias("_wkeys"))
         .select("doc", F.explode("_wkeys").alias("wkey"))
     )
-    if max_df is None:
-        # r6 (guide §4, the lsh.candidate_pairs guard): the self-join below
-        # expands this plan per side — an un-materialized window kernel
-        # would run twice over the corpus. (The max_df branch already
-        # checkpoints for its three consumers.)
-        windows = windows.localCheckpoint()
+    # the self-join below expands this plan per side (plus the df
+    # aggregate under max_df): materialize the Arrow kernel once instead of
+    # re-running it per consumer
+    windows = windows.localCheckpoint()
     if max_df is not None:
         import logging
 
-        # three consumers below (df agg + both join sides) — materialize the
-        # Arrow kernel once instead of re-running it per consumer
-        windows = windows.localCheckpoint()
         # df per key aggregates map-side (count combine); the hot list is
         # tiny by definition (keys with df > cap)
         hot = (

@@ -58,6 +58,12 @@ def business_view(corpus: DataFrame, labels: DataFrame, edges: DataFrame,
     (it IS in a duplicate cluster — reference painless 216-218).
 
     Default ``max_members_inline=None`` preserves exact reference semantics.
+
+    Precondition: ``corpus`` has one row per url (the pipeline's corpus
+    and the url-keyed UpsertTable both guarantee it); it is not checked.
+    With ``max_members_inline=None`` cluster sizes are counted over member
+    rows joined to ``corpus``, so a duplicated url inflates its cluster's
+    size and can flip isDuplicate, hasTransDuplicate and the chain.
     """
     # direct neighbors with provenance, both directions (the reference's
     # adjacency list is symmetric: each member stores its own copy)

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import time
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -109,13 +110,16 @@ class StageCatalog:
             profile["partitions"] = per_part
         return profile
 
-    def write(self, name: str, df: DataFrame, counters: dict | None = None) -> DataFrame:
+    def write(self, name: str, df: DataFrame,
+              counters: dict | Callable[[], dict] | None = None) -> DataFrame:
         """Write a stage table + manifest; returns the re-read DataFrame so
         downstream stages consume the materialized (checkpointed) data, not
         the live lineage. On the parquet backend, row count and the
         per-partition profile come from the parquet footers (no extra
         count() job); on Iceberg the count comes from the committed
-        snapshot's summary (also job-free)."""
+        snapshot's summary (also job-free). A callable ``counters`` is
+        called once the data has landed — for counters the write job
+        itself observes (``DataFrame.observe``)."""
         if self.iceberg_db is not None:
             full = f"{self.iceberg_db}.{name}"
             df.writeTo(full).using("iceberg").createOrReplace()
@@ -138,7 +142,7 @@ class StageCatalog:
             "status": "complete",
             "rows": profile["rows_total"],
             "partition_profile": profile,
-            "counters": counters or {},
+            "counters": (counters() if callable(counters) else counters) or {},
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         self._table_dir(name).mkdir(parents=True, exist_ok=True)

@@ -45,24 +45,3 @@ def stream_exact_dedup(
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["fp"])
     )
-
-
-def stream_session_counts(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    ts_col: str = "warc_ts",
-    window: str = "1 day",
-) -> DataFrame:
-    """Windowed ingest monitoring: pages + distinct-ish content per window
-    (approx_count_distinct keeps state bounded)."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    return (
-        stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, "1 hour")
-        .groupBy(F.window(F.col(ts_col), window))
-        .agg(
-            F.count(F.lit(1)).alias("n_pages"),
-            F.approx_count_distinct(fingerprint_expr(F.col("text"))).alias("approx_distinct"),
-        )
-    )

@@ -78,7 +78,7 @@ def main(argv=None) -> int:
     out = run_pipeline(
         spark, pages, args.workdir, cfg,
         resume=not args.no_resume,
-        star_reduce=False if args.exact_buckets else "auto",
+        star_reduce=not args.exact_buckets,
         engines=engines, enriched=args.enriched,
     )
     from pyspark.sql import functions as F

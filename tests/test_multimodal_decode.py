@@ -15,7 +15,6 @@ from co_deduplicate_spark.operators.multimodal import (
     audio_features,
     extract_features,
     image_features,
-    resize_bmp,
 )
 from co_deduplicate_spark.operators.multimodal import encode_bmp as make_bmp
 from co_deduplicate_spark.operators.multimodal import encode_wav as make_wav
@@ -74,16 +73,3 @@ def test_spark_extract_features_real_flags(spark):
     assert np.allclose(got[1]["features"], image_features(px))
     assert np.allclose(got[2]["features"], audio_features(*_wav_decode(wav)))
 
-
-def test_resize_bmp_nearest(spark):
-    # 4x4 checkerboard → 2x2 nearest-neighbor picks the top-left of each block
-    px = np.zeros((4, 4, 3), dtype=np.uint8)
-    px[0:2, 2:4] = 255
-    px[2:4, 0:2] = 255
-    media = spark.createDataFrame([(7, bytearray(make_bmp(px)))], "media_id long, blob binary")
-    row = resize_bmp(media, thumb_w=2, thumb_h=2).collect()[0]
-    thumb = np.array(row["thumb"]).reshape(2, 2, 3)
-    assert np.array_equal(thumb[0, 0], [0, 0, 0])
-    assert np.array_equal(thumb[0, 1], [255, 255, 255])
-    assert np.array_equal(thumb[1, 0], [255, 255, 255])
-    assert np.array_equal(thumb[1, 1], [0, 0, 0])

@@ -1,0 +1,96 @@
+"""The run_pipeline stage-loop contract: stage order, lineage field names,
+observed counters equal to a direct recount, and a resume that appends
+nothing. Counters come from ``DataFrame.observe`` on each stage's write,
+so these tests recount every one of them from the stored tables."""
+
+from __future__ import annotations
+
+import json
+
+import pytest
+from pyspark.sql import functions as F
+
+from co_deduplicate_spark.config import DedupConfig
+from co_deduplicate_spark.plans.pipeline import run_pipeline
+from co_deduplicate_spark.sources.pages import synth_pages
+
+N_DOCS = 300  # the small page fixture of test_pages_pipeline.py
+# max_doc_chars below the fixture's longest pages, so some records are
+# flagged and the observed flag counter is not trivially zero
+CFG = DedupConfig(max_doc_chars=1200)
+STAGES = ["corpus", "signatures", "candidate_edges", "cluster_labels", "clusters", "enriched"]
+PARTITIONS = ["n_partitions", "rows_max", "skew_max_over_mean"]
+LINEAGE_FIELDS = {
+    "corpus": ["flagged_records", *PARTITIONS],
+    "signatures": ["non_deduplicable", *PARTITIONS],
+    "candidate_edges": ["engines", "lsh_hot_buckets", "lsh_max_hot_bucket",
+                        "lsh_hot_clique_pairs_avoided", "lsh_star_threshold",
+                        "lsh_band_rows", *PARTITIONS],
+    "cluster_labels": PARTITIONS,
+    "clusters": ["duplicate_clusters", "capped_clusters", "max_cluster_size",
+                 "chain_max_members", *PARTITIONS],
+    "enriched": [],
+}
+
+
+@pytest.fixture(scope="module")
+def pages(spark):
+    return synth_pages(spark, N_DOCS, seed=42).cache()
+
+
+def _lineage(wk) -> list[dict]:
+    return [json.loads(line) for line in (wk / "lineage.jsonl").read_text().splitlines()]
+
+
+def _manifest(wk, stage) -> dict:
+    return json.loads((wk / stage / "_STAGE_MANIFEST.json").read_text())
+
+
+def test_stage_loop_lineage_and_observed_counters(spark, pages, tmp_path):
+    wk = tmp_path / "wk"
+    out = run_pipeline(spark, pages, str(wk), CFG, enriched=True)
+    recs = _lineage(wk)
+    assert [r["stage"] for r in recs] == STAGES
+    for r in recs:
+        common = ["stage", "config_hash", "written_at", "rows_out", "wall_s"]
+        assert sorted(r) == sorted(common + LINEAGE_FIELDS[r["stage"]]), r["stage"]
+    by = {r["stage"]: r for r in recs}
+
+    corpus, sigs, clusters = out["corpus"], out["signatures"], out["clusters"]
+    n_flagged = corpus.filter(F.size("quality_flags") > 0).count()
+    assert 0 < n_flagged < N_DOCS
+    assert by["corpus"]["flagged_records"] == n_flagged
+    n_null = sigs.filter(F.col("minhash").isNull()).count()
+    assert n_null > 0  # the fixture plants a non-deduplicable page
+    assert by["signatures"]["non_deduplicable"] == n_null
+    assert _manifest(wk, "signatures")["counters"] == {"non_deduplicable": n_null}
+    assert by["candidate_edges"]["lsh_band_rows"] == (sigs.count() - n_null) * CFG.lsh_bands
+    assert by["clusters"]["duplicate_clusters"] == clusters.filter("is_duplicate").count()
+    assert by["clusters"]["capped_clusters"] == clusters.filter("truncated").count()
+    assert by["clusters"]["max_cluster_size"] == clusters.agg(F.max("size")).first()[0]
+    assert by["enriched"]["rows_out"] == out["enriched"].count() == N_DOCS
+    assert set(_manifest(wk, "enriched")["counters"]) == {"upsert_version"}
+    for stage in STAGES[:-1]:
+        assert by[stage]["rows_out"] == out[stage].count() == _manifest(wk, stage)["rows"]
+
+    # resume: every stage is complete, so the loop appends no lineage record
+    run_pipeline(spark, pages, str(wk), CFG, enriched=True)
+    assert len(_lineage(wk)) == len(STAGES)
+
+
+def test_exact_mode_lineage_fields(spark, pages, tmp_path):
+    """star_reduce=False logs the full bucket histogram; recount it from
+    the stored signatures."""
+    from co_deduplicate_spark.operators.lsh import band_table
+
+    wk = tmp_path / "wk_exact"
+    out = run_pipeline(spark, pages, str(wk), CFG, star_reduce=False)
+    rec = {r["stage"]: r for r in _lineage(wk)}["candidate_edges"]
+    sizes = [r["n"] for r in band_table(out["signatures"], CFG)
+             .groupBy("band_id", "band_hash").agg(F.count("*").alias("n")).collect()]
+    assert rec["lsh_star_threshold"] is None
+    assert rec["lsh_n_buckets"] == len(sizes)
+    assert rec["lsh_max_bucket"] == max(sizes) > 1
+    assert rec["lsh_hot_buckets"] == sum(n > CFG.band_bucket_cap for n in sizes)
+    assert rec["lsh_clique_pairs_exact_mode"] == sum(n * (n - 1) // 2 for n in sizes)
+    assert rec["lsh_clique_pairs_exact_mode"] >= rec["rows_out"] > 0

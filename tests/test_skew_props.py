@@ -10,14 +10,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from co_deduplicate_spark.config import DedupConfig
-from co_deduplicate_spark.operators.ann import bucketed_ann_topk, cosine_topk
 from co_deduplicate_spark.operators.minhash import minhash_py, shingles_py
-from co_deduplicate_spark.operators.skew import (
-    broadcast_salted_join,
-    salted_collect_set,
-    salted_count,
-    salted_sum,
-)
+from co_deduplicate_spark.operators.skew import salted_collect_set, salted_count
 from co_deduplicate_spark.operators.substring import suffix_window_pairs
 
 CFG = DedupConfig()
@@ -40,15 +34,6 @@ def test_salted_count_matches_plain(spark, skewed):
     assert salted == plain
 
 
-def test_salted_sum_matches_plain(spark, skewed):
-    plain = {r["key"]: round(r["s"], 6) for r in skewed.groupBy("key").agg(F.sum("val").alias("s")).collect()}
-    salted = {
-        r["key"]: round(r["sum_val"], 6)
-        for r in salted_sum(skewed, ["key"], "val", F.col("rid"), n_salts=8).collect()
-    }
-    assert salted == plain
-
-
 def test_salted_collect_set_matches_plain(spark):
     rows = [("a", f"m{i % 7}") for i in range(1000)] + [("b", "x")]
     df = spark.createDataFrame(rows, "key string, member string")
@@ -61,15 +46,6 @@ def test_salted_collect_set_matches_plain(spark):
         for r in salted_collect_set(df, ["key"], "member", F.col("member"), n_salts=4).collect()
     }
     assert salted == plain
-
-
-def test_broadcast_salted_join_matches_plain(spark, skewed):
-    small = spark.createDataFrame(
-        [("hot", 1), ("k0", 2), ("k5", 3)], "key string, tag int"
-    )
-    plain = skewed.join(small, "key").groupBy("key", "tag").count()
-    salted = broadcast_salted_join(skewed, small, "key", n_salts=8).groupBy("key", "tag").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
 # ------------------------------------------------- substring shared windows
@@ -85,26 +61,6 @@ def test_suffix_window_pairs(spark):
              suffix_window_pairs(df, window_tokens=30).collect()}
     assert (1, 2) in pairs  # docs 1 and 2 share the 30-token window tok30..tok59
     assert not any(3 in p for p in pairs)
-
-
-# --------------------------------------------------------------- ANN bucket
-def test_bucketed_ann_subset_of_exact(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    vecs = [(i, [float(x) for x in rng.standard_normal(64)]) for i in range(200)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    exact = cosine_topk(df, [0, 1, 2], k=5)
-    approx = bucketed_ann_topk(df, [0, 1, 2], k=5, n_planes=4)
-    exact_set = {(r["query_id"], r["neighbor_id"], r["cos_micro"]) for r in exact.collect()}
-    # bucketed results are genuine cosines (subset of the full scored space)
-    all_scores = {
-        (r["query_id"], r["neighbor_id"]): r["cos_micro"]
-        for r in cosine_topk(df, [0, 1, 2], k=10**6).collect()
-    }
-    for r in approx.collect():
-        assert all_scores[(r["query_id"], r["neighbor_id"])] == r["cos_micro"]
-    assert exact_set  # exact nonempty
 
 
 # ----------------------------------------------------- hypothesis properties

@@ -15,7 +15,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from co_deduplicate_spark.config import DedupConfig
-from co_deduplicate_spark.functions.normalize import norm_expr, tokens_expr
+from co_deduplicate_spark.functions.normalize import (
+    duckdb_norm_sql,
+    duckdb_tokens_sql,
+    norm_expr,
+    tokens_expr,
+)
 from co_deduplicate_spark.functions.text_stats import STOPWORDS
 from co_deduplicate_spark.operators.ann import cosine_topk
 from co_deduplicate_spark.operators.connected_components import (
@@ -28,6 +33,12 @@ from co_deduplicate_spark.operators.lsh import band_table, candidate_pairs
 from co_deduplicate_spark.operators.minhash import with_minhash
 from co_deduplicate_spark.operators.simhash import hamming_pairs, with_simhash
 from co_deduplicate_spark.operators.substring import containment_pairs
+from co_deduplicate_spark.plans.business_view import (
+    business_view,
+    cluster_table,
+    with_session_predicates,
+)
+from co_deduplicate_spark.plans.pipeline import cluster_labels_stage
 from co_deduplicate_spark.plans.rules import Rule, rule_pairs
 
 CFG = DedupConfig()
@@ -92,11 +103,8 @@ def _scratch(sf_dir: str, family: str) -> str:
 # shared DuckDB fragments (mirrors of functions/normalize.py expressions)
 # --------------------------------------------------------------------------
 
-_SQL_TOKS = (
-    "SELECT doc_id, list_filter(string_split(trim(regexp_replace(strip_accents("
-    "lower(text)), '[^0-9a-z]+', ' ', 'g')), ' '), t -> t != '') AS ts FROM documents"
-)
-_SQL_NORM = "regexp_replace(strip_accents(lower(text)), '[^0-9a-z]+', '', 'g')"
+_SQL_TOKS = f"SELECT doc_id, {duckdb_tokens_sql('text')} AS ts FROM documents"
+_SQL_NORM = duckdb_norm_sql("text")
 _SQL_SHINGLES3 = (
     "SELECT doc_id, list_distinct(list_filter(list_transform("
     "range(0, greatest(len(ts) - 2, 1)), i -> array_to_string(ts[i+1:i+3], ' ')), "
@@ -237,7 +245,7 @@ def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands = band_table(sigs, CFG).localCheckpoint()
         verified = verify_candidates(
             candidate_pairs(bands, CFG), docs, id_col="doc_id", text_col="text",
-            threshold=CFG.jaccard_threshold, shingle_k=CFG.shingle_k, fold=ASCII_FOLD,
+            threshold=CFG.jaccard_threshold, shingle_k=CFG.shingle_k,
             candidates_distinct=True,  # candidate_pairs ends in distinct()
         )
         _VERIFIED_CACHE[key] = verified.localCheckpoint()
@@ -245,19 +253,14 @@ def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id long, cluster_id long): components over verified dup edges.
+    """(node long, component long): the pipeline's cluster_labels stage
+    over the verified dup edges.
 
     CC is type-preserving — long node ids shuffle as longs (half the width
     of the round-1 zero-padded strings) and component = numeric min member
     (matches the SQL oracle's least())."""
-    docs = _t(spark, sf_dir, "documents")
-    edges = _lsh_verified_pairs(spark, sf_dir).select("src", "dst")
-    labels = connected_components(edges, cfg=CFG)
-    labels = attach_singletons(labels, docs.select(F.col("doc_id").alias("doc")), "doc")
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("component").alias("cluster_id"),
-    )
+    corpus = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("url"))
+    return cluster_labels_stage(_lsh_verified_pairs(spark, sf_dir), corpus, CFG)[0]
 
 
 _SQL_CC = f"""
@@ -411,7 +414,7 @@ def q_token_jaccard_pairs(spark, sf_dir):
     via inverted-index join."""
     return jaccard_pairs(
         _t(spark, sf_dir, "documents"), id_col="doc_id", text_col="text",
-        threshold=0.8, shingle_k=1, fold=ASCII_FOLD,
+        threshold=0.8, shingle_k=1,
     ).select("src", "dst", "jaccard_ppm")
 
 
@@ -419,7 +422,7 @@ def q_shingle_jaccard_pairs(spark, sf_dir):
     """3-shingle exhaustive Jaccard (the verification-side semantics)."""
     return jaccard_pairs(
         _t(spark, sf_dir, "documents"), id_col="doc_id", text_col="text",
-        threshold=CFG.jaccard_threshold, shingle_k=CFG.shingle_k, fold=ASCII_FOLD,
+        threshold=CFG.jaccard_threshold, shingle_k=CFG.shingle_k,
     ).select("src", "dst", "jaccard_ppm")
 
 
@@ -433,25 +436,18 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 def q_dup_clusters_cc(spark, sf_dir):
     """G3: connected components over verified dup edges (exact transitive
     closure; reference bounds it at 5 hops, documentsManager.js:188-190)."""
-    return _cc_labels(spark, sf_dir)
+    return _cc_labels(spark, sf_dir).select(
+        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
 
 
 def q_cluster_chains(spark, sf_dir):
-    """G4/A3/A4: per-cluster deterministic chain + sorted sources + size."""
-    docs = _t(spark, sf_dir, "documents")
-    labels = _cc_labels(spark, sf_dir)
-    return (
-        labels.join(docs.select("doc_id", "source"), "doc_id")
-        .groupBy("cluster_id")
-        .agg(
-            F.concat(
-                F.lit("!"), F.concat_ws("!", F.array_sort(F.collect_set("doc_id"))), F.lit("!")
-            ).alias("chain"),
-            F.concat_ws(",", F.array_sort(F.collect_set("source"))).alias("sources"),
-            F.count(F.lit(1)).alias("size"),
-        )
-        .filter(F.col("size") >= 2)
-    )
+    """G4/A3/A4: per-cluster deterministic chain + sorted sources + size —
+    the pipeline's uncapped cluster aggregate over the CC labels."""
+    corpus = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("url"), "source")
+    clusters = cluster_table(_cc_labels(spark, sf_dir), corpus, CFG.salt_buckets,
+                             max_members=None)
+    return clusters.filter("is_duplicate").select(
+        "cluster_id", "chain", F.concat_ws(",", "sources").alias("sources"), "size")
 
 
 def q_simhash_values(spark, sf_dir):
@@ -462,7 +458,7 @@ def q_simhash_values(spark, sf_dir):
 
 
 def q_simhash_hamming_pairs(spark, sf_dir):
-    """Engine 2: pigeonhole chunk join + Hamming verify (<= 3)."""
+    """Engine 2: multi-block blocking join + Hamming verify (<= 3)."""
     sigs = with_simhash(_t(spark, sf_dir, "documents"), CFG, id_col="doc_id")
     return hamming_pairs(sigs, CFG)
 
@@ -555,11 +551,6 @@ def q_session_predicates(spark, sf_dir):
     labelling (edges stamped s0/s1 by parity of src+dst; current = s0).
     Transitive members carry no session and count as other-session — the
     reference's JS `!==` semantics on an absent field (helpers.js:120-149)."""
-    from co_deduplicate_spark.plans.business_view import (
-        business_view,
-        with_session_predicates,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.select(
         F.col("doc_id").cast("string").alias("url"),
@@ -573,8 +564,7 @@ def q_session_predicates(spark, sf_dir):
         F.when(F.pmod(F.col("src") + F.col("dst"), F.lit(2)) == 0, F.lit("s0"))
         .otherwise(F.lit("s1")).alias("session"),
     )
-    labels = connected_components(edges.select("src", "dst"), cfg=CFG)
-    labels = attach_singletons(labels, corpus.select(F.col("url").alias("node")), "node")
+    labels = cluster_labels_stage(edges, corpus, CFG)[0]
     view = with_session_predicates(business_view(corpus, labels, edges), "s0")
     return view.select(
         F.col("url").alias("doc_id"),
@@ -593,7 +583,6 @@ def q_business_view_enriched(spark, sf_dir):
     (sources/upsert.py MERGE semantics) and read back. Doc ids are treated
     as strings end-to-end (CC orders lexicographically; the oracle mirrors
     with VARCHAR least/min)."""
-    from co_deduplicate_spark.plans.business_view import business_view
     from co_deduplicate_spark.sources.upsert import UpsertTable, ingest_defaults
 
     docs = _t(spark, sf_dir, "documents")
@@ -607,8 +596,7 @@ def q_business_view_enriched(spark, sf_dir):
         F.array(F.lit("minhash-lsh")).alias("rules"),
         F.lit("batch-0").alias("session"),
     )
-    labels = connected_components(edges.select("src", "dst"), cfg=CFG)
-    labels = attach_singletons(labels, corpus.select(F.col("url").alias("node")), "node")
+    labels = cluster_labels_stage(edges, corpus, CFG)[0]
     view = business_view(corpus, labels, edges)
     n_direct = F.size(F.filter(F.col("duplicates"), lambda d: F.size(d["rules"]) > 0))
     flat = view.select(
@@ -669,7 +657,7 @@ def q_incremental_session_merge(spark, sf_dir):
     )
     old_pairs = jaccard_pairs(
         old, id_col="url", text_col="text",
-        threshold=CFG.jaccard_threshold, shingle_k=CFG.shingle_k, fold=ASCII_FOLD,
+        threshold=CFG.jaccard_threshold, shingle_k=CFG.shingle_k,
     )
     ids = docs.select(F.col("doc_id").alias("id"))
     anchors = (

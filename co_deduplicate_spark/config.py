@@ -40,11 +40,9 @@ class DedupConfig:
 
     # --- SimHash (engine 2) ---
     simhash_bits: int = 60        # 60 bits = 15 hex chars of md5 → fits signed int64
-    hamming_max: int = 3          # Hamming-ball radius; pigeonhole chunks = hamming_max + 1
-    # blocking strategy: "multiblock" joins on C(m, m-d) combinations of
-    # m-d of m blocks (wide keys, 100 TB default); "pigeonhole" on single
-    # d+1 chunks (minimal explode, narrow keys). Both are exact.
-    simhash_blocking: str = "multiblock"
+    hamming_max: int = 3          # Hamming-ball radius
+    # blocking joins on every C(m, m-d) combination of m-d of m blocks
+    # (exact; wide keys — PLANS.md §7)
     simhash_blocks: int = 6       # m; 60 bits / 6 = 10-bit blocks, C(6,3)=20 keys
 
     # --- suffix/substring (engine 3) ---
@@ -66,7 +64,6 @@ class DedupConfig:
 
     # --- clustering ---
     cc_max_iterations: int = 50
-    cc_checkpoint_every: int = 5
 
     # --- skew control ---
     band_bucket_cap: int = 2000   # pairs per LSH bucket before salted split kicks in

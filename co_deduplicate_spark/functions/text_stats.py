@@ -1,11 +1,10 @@
-"""Text-analysis functions for a training-data pipeline.
+"""Text-analysis constants and functions for a training-data pipeline.
 
 These have no counterpart in the reference (its inputs arrive pre-scored
-from the co-formatter upstream, /root/reference/README.md:19); they are the
-operations a web-scale corpus pipeline needs before dedup: language ID,
-quality scoring, token counting, content fingerprinting. All JVM-side
-Column expressions — no Python in the hot path — with DuckDB-SQL mirrors
-for the correctness oracle.
+from the co-formatter upstream, reference README.md:19): the stopword
+lists behind the entry's language-guess and quality queries
+(integer-ppm forms with DuckDB mirrors in ``__spark_entry__``), and the
+content fingerprint behind exact dedup.
 """
 
 from __future__ import annotations
@@ -13,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .normalize import tokens_expr
+from .normalize import norm_expr
 
 # Tiny embedded stopword lists for the n-gram/stopword language heuristic.
 # Deliberately short + frozen: they are part of the engine config surface,
@@ -25,62 +24,10 @@ STOPWORDS = {
 }
 
 
-def token_count_expr(text: Column) -> Column:
-    """Whitespace-ish token count over normalized text."""
-    return F.size(tokens_expr(text))
-
-
-def word_token_count_expr(text: Column) -> Column:
-    """BPE-ish token estimate: alphanumeric runs + each punctuation glyph
-    counts as one token (a cheap proxy for subword tokenizers)."""
-    alnum_runs = F.size(tokens_expr(text))
-    punct = F.length(F.regexp_replace(text, r"[0-9A-Za-z\s]+", ""))
-    return (alnum_runs + punct).cast("int")
-
-
-def stopword_ratio_expr(tokens: Column, lang: str) -> Column:
-    """Fraction of tokens found in the language's stopword list."""
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(tokens, lambda t: F.array_contains(sw, t)))
-    return F.when(F.size(tokens) > 0, hits / F.size(tokens)).otherwise(F.lit(0.0))
-
-
-def lang_guess_expr(tokens: Column) -> Column:
-    """Pick the language whose stopword ratio is highest (ties → lexicographic
-    order of language code, 'und' when all ratios are zero)."""
-    scored = F.array(
-        *[
-            F.struct(stopword_ratio_expr(tokens, lang).alias("score"), F.lit(lang).alias("lang"))
-            for lang in sorted(STOPWORDS)
-        ]
-    )
-    best = F.array_max(scored)  # struct compare: score first, then lang
-    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
-def quality_score_expr(text: Column) -> Column:
-    """Composite quality score in [0,1]: length band, alpha ratio, mean
-    token length band — the usual cheap web-text quality gates."""
-    n_chars = F.length(text)
-    tokens = tokens_expr(text)
-    n_tokens = F.size(tokens)
-    alpha_chars = F.length(F.regexp_replace(text, r"[^A-Za-z]", ""))
-    alpha_ratio = F.when(n_chars > 0, alpha_chars / n_chars).otherwise(F.lit(0.0))
-    mean_tok_len = F.when(
-        n_tokens > 0,
-        F.aggregate(tokens, F.lit(0).cast("double"), lambda acc, t: acc + F.length(t)) / n_tokens,
-    ).otherwise(F.lit(0.0))
-    len_ok = F.when((n_tokens >= 10) & (n_tokens <= 100000), F.lit(1.0)).otherwise(F.lit(0.0))
-    tok_ok = F.when((mean_tok_len >= 2.0) & (mean_tok_len <= 12.0), F.lit(1.0)).otherwise(F.lit(0.0))
-    return F.round((len_ok + tok_ok + alpha_ratio) / F.lit(3.0), 6)
-
-
 def fingerprint_expr(text: Column, fold: bool = False) -> Column:
     """Deterministic content fingerprint: md5 of the normalized text.
 
     Plays the role of the reference's normalized-equality match key
     (README.md:30-45 — normalize once at index time, compare exact).
     """
-    from .normalize import norm_expr
-
     return F.md5(norm_expr(text, fold=fold))

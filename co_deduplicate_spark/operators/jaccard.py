@@ -10,10 +10,7 @@ clause is a Lucene term lookup).
 
 Scale notes:
   * postings are (token, doc) pairs — the self-join shuffles on token;
-    AQE skew-join splits hot tokens. A document-frequency cap
-    (``max_df``) optionally drops ubiquitous tokens (boilerplate) from
-    *candidate generation only* — dropped-token counts are surfaced, never
-    silent, and the final Jaccard is still computed over the full sets.
+    AQE skew-join splits hot tokens.
   * at true 100 TB scale this operator is only ever fed LSH candidates;
     the exhaustive mode exists for small corpora and for the oracle gate.
 """
@@ -28,7 +25,7 @@ from pyspark.sql import functions as F
 
 
 def token_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-               shingle_k: int = 1, fold: bool = True) -> DataFrame:
+               shingle_k: int = 1) -> DataFrame:
     """(id, tokens array<bigint>, n_tokens) — distinct token k-shingles as
     64-bit hashes (minhash.py::shingle_hashes, the same memoized
     blake2b+splitmix kernel the MinHash signatures consume).
@@ -56,9 +53,8 @@ def token_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     used to be ``array<string>`` (the shingle text). A consumer that needs
     the strings must call ``minhash.shingles_py`` itself.
 
-    ``fold`` is accepted for API stability but the kernel always
-    accent-folds (tokens_py semantics == the DuckDB oracle's
-    strip_accents; folding is the identity on ASCII corpora).
+    The kernel always accent-folds (tokens_py semantics == the DuckDB
+    oracle's strip_accents; folding is the identity on ASCII corpora).
     """
     import numpy as np
 
@@ -85,59 +81,15 @@ def token_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 
 
 def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                  threshold: float = 0.8, shingle_k: int = 1, fold: bool = True,
-                  max_df: int | None = None) -> DataFrame:
+                  threshold: float = 0.8, shingle_k: int = 1) -> DataFrame:
     """All pairs (src < dst) with token-set Jaccard >= threshold.
 
-    ``max_df=None`` (default) is exhaustive — recall 1.0 by construction:
-    every overlapping pair survives the postings join.
-
-    ``max_df=N`` drops tokens appearing in more than N documents from
-    CANDIDATE GENERATION only (the hot-token/boilerplate cost control for
-    the standalone mode): candidate pairs come from the pruned postings
-    join, but their Jaccard is then computed exactly over the FULL token
-    sets (array_intersect). Trade-off, stated plainly: a pair whose entire
-    overlap is hot tokens is missed — recall < 1.0. The number of dropped
-    tokens is logged (never silent).
+    Exhaustive — recall 1.0 by construction: every overlapping pair
+    survives the postings join.
     """
-    import logging
-
     # materialize the shingle table once — it feeds both join sides
-    ts = token_sets(docs, id_col, text_col, shingle_k, fold=fold).localCheckpoint()
+    ts = token_sets(docs, id_col, text_col, shingle_k).localCheckpoint()
     postings = ts.select("doc", "n_tokens", F.explode("tokens").alias("token"))
-    if max_df is not None:
-        hot = (
-            postings.groupBy("token")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("token")
-            .localCheckpoint()
-        )
-        n_hot = hot.count()
-        logging.getLogger(__name__).info(
-            "jaccard_pairs max_df=%d: dropping %d hot tokens from candidate generation",
-            max_df, n_hot,
-        )
-        kept = postings.join(hot, "token", "left_anti")
-        a, b = kept.alias("a"), kept.alias("b")
-        cand = (
-            a.join(b, (F.col("a.token") == F.col("b.token")) & (F.col("a.doc") < F.col("b.doc")))
-            .select(F.col("a.doc").alias("src"), F.col("b.doc").alias("dst"))
-            .distinct()
-        )
-        out = (
-            cand.join(ts.select(F.col("doc").alias("src"), F.col("tokens").alias("_ta"),
-                                F.col("n_tokens").alias("na")), "src")
-            .join(ts.select(F.col("doc").alias("dst"), F.col("tokens").alias("_tb"),
-                            F.col("n_tokens").alias("nb")), "dst")
-            .withColumn("inter", F.size(F.array_intersect("_ta", "_tb")))
-            .withColumn("jaccard_ppm", F.expr("(inter * 1000000L) div (na + nb - inter)"))
-            .withColumn("jaccard",
-                        F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6))
-            .filter(F.col("jaccard_ppm") >= int(threshold * 1_000_000))
-            .select("src", "dst", "jaccard", "jaccard_ppm")
-        )
-        return out
     a = postings.alias("a")
     b = postings.alias("b")
     inter = (
@@ -162,8 +114,7 @@ def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
 
 def verify_candidates(candidates: DataFrame, docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", threshold: float = 0.8,
-                      shingle_k: int = 3, fold: bool = True,
-                      candidates_distinct: bool = False) -> DataFrame:
+                      shingle_k: int = 3, candidates_distinct: bool = False) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs (src, dst).
 
     Joins each side to its shingle set, intersects via a postings join
@@ -196,7 +147,7 @@ def verify_candidates(candidates: DataFrame, docs: DataFrame, id_col: str = "doc
         cand_docs.withColumnRenamed("doc", id_col), id_col, "left_semi"
     )
     # Shingle-set table feeds both join sides — materialize once.
-    ts = token_sets(pruned, id_col, text_col, shingle_k, fold=fold).localCheckpoint()
+    ts = token_sets(pruned, id_col, text_col, shingle_k).localCheckpoint()
 
     # Exact intersection per pair via array_intersect (hash-set, O(n+m))
     # directly on the two shingle arrays: two shuffle joins keyed on doc id,

@@ -34,9 +34,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import DedupConfig
 from ..functions.normalize import tokens_py
@@ -166,34 +165,26 @@ def minhash_signature_udf(cfg: DedupConfig):
 
 
 def with_minhash(docs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id",
-                 text_col: str = "text", repartition: int | None = 0) -> DataFrame:
+                 text_col: str = "text") -> DataFrame:
     """(id, minhash array<long>, n_shingles int) signature table.
 
     The Arrow kernel parallelizes per-partition, and parquet inputs often
-    arrive as one or two files — so by default the projection is
-    repartitioned to the session's default parallelism before the UDF
-    (``repartition=None`` disables, an int pins the count). Only (id, text)
-    are shuffled — column pruning keeps document metadata out of the
-    exchange. n_shingles (lineage counter, FIXTURES.md §3) rides along from
-    the same kernel pass via signature cardinality bookkeeping JVM-side.
+    arrive as one or two files — so an under-parallel projection is
+    repartitioned to the session's default parallelism before the UDF.
+    Only (id, text) are shuffled — column pruning keeps document metadata
+    out of the exchange. n_shingles (lineage counter, FIXTURES.md §3)
+    rides along from the same kernel pass.
     """
     narrow = docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_text"))
-    if repartition is not None:
-        n = repartition or docs.sparkSession.sparkContext.defaultParallelism
-        # r6 (guide §2.4): only shuffle when the input is UNDER-parallel
-        # (e.g. a single local parquet file). A 100 TB scan already arrives
-        # in thousands of splits — the unconditional repartition was a full
-        # (id, text) exchange for nothing; signatures are per-row
-        # deterministic, so partitioning never affects values.
-        if narrow.rdd.getNumPartitions() < n:
-            narrow = narrow.repartition(n, "doc")
+    n = docs.sparkSession.sparkContext.defaultParallelism
+    # r6 (guide §2.4): only shuffle when the input is UNDER-parallel
+    # (e.g. a single local parquet file). A 100 TB scan already arrives
+    # in thousands of splits — the unconditional repartition was a full
+    # (id, text) exchange for nothing; signatures are per-row
+    # deterministic, so partitioning never affects values.
+    if narrow.rdd.getNumPartitions() < n:
+        narrow = narrow.repartition(n, "doc")
     sig = minhash_signature_udf(cfg)
     return narrow.select("doc", sig(F.col("_text")).alias("_s")).select(
         "doc", F.col("_s.minhash").alias("minhash"), F.col("_s.n_shingles").alias("n_shingles")
     )
-
-
-def estimated_jaccard_expr(sig_a: Column, sig_b: Column, cfg: DedupConfig) -> Column:
-    """Fraction of agreeing permutation slots — the MinHash estimator."""
-    agree = F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int"))
-    return F.aggregate(agree, F.lit(0), lambda acc, x: acc + x) / F.lit(cfg.num_perms)

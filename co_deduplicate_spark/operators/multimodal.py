@@ -1,19 +1,16 @@
 """Multimodal column handling (image/audio/video as opaque binary).
 
 No reference counterpart — this is the training-data-pipeline extension:
-media travels as ``binary`` columns with typed metadata structs; decode /
-feature-extraction steps are Arrow-batched ``mapInPandas`` operators.
+media travels as ``binary`` columns; decode steps are Arrow-batched
+``mapInPandas`` operators.
 
 Decode coverage in this environment (no codec libraries in the container):
-
-* REAL pure-numpy decode paths, no stub: uncompressed 24-bit BI_RGB
-  **BMP** (full pixel array → channel stats + 3×3 luminance grid features) and mono/stereo 16-bit PCM **WAV** (sample
-  array → RMS/ZCR/8-band rFFT spectrum features). Golden-value tested
-  (tests/test_multimodal_decode.py).
-* Header-only parsing for **PNG/JPEG** (dimensions from the bytestream) —
-  real metadata, but pixel decode for compressed formats is where a codec
-  worker plugs in: their ``extract_features`` output is a clearly-marked
-  deterministic content-hash stand-in (``real=false`` in the output).
+REAL pure-numpy decode paths, no stub, for uncompressed 24-bit BI_RGB
+**BMP** (full pixel array → integer channel sums), 16-bit PCM **WAV**
+(samples → integer statistics) and a BMP-frame video container; each is
+graded bit-exactly by a DuckDB oracle (``media_*`` queries) and the codecs
+round-trip (tests/test_multimodal_decode.py). Compressed formats are where
+a codec worker plugs in.
 
 The Spark-side plumbing — schema, batch iteration, partition sizing — is
 the production shape either way.
@@ -21,70 +18,12 @@ the production shape either way.
 
 from __future__ import annotations
 
-import hashlib
 import struct
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id long, kind string, width int, height int, "
-    "byte_len long, sha256 string, valid boolean"
-)
-
-
-def _png_dims(b: bytes) -> tuple[int, int] | None:
-    if len(b) >= 24 and b[:8] == b"\x89PNG\r\n\x1a\n" and b[12:16] == b"IHDR":
-        w, h = struct.unpack(">II", b[16:24])
-        return w, h
-    return None
-
-
-def _jpeg_dims(b: bytes) -> tuple[int, int] | None:
-    if len(b) < 4 or b[:2] != b"\xff\xd8":
-        return None
-    i = 2
-    while i + 9 < len(b):
-        if b[i] != 0xFF:
-            return None
-        marker = b[i + 1]
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3):
-            h, w = struct.unpack(">HH", b[i + 5 : i + 9])
-            return w, h
-        seg_len = struct.unpack(">H", b[i + 2 : i + 4])[0]
-        i += 2 + seg_len
-    return None
-
-
-def decode_image_meta(media: DataFrame, id_col: str = "media_id",
-                      blob_col: str = "blob") -> DataFrame:
-    """binary → typed metadata via mapInPandas (per-partition Arrow batches,
-    the pattern a real decoder plugs into)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                b = bytes(blob) if blob is not None else b""
-                dims = _png_dims(b) or _jpeg_dims(b)
-                kind = "png" if _png_dims(b) else ("jpeg" if _jpeg_dims(b) else "unknown")
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "kind": kind,
-                        "width": dims[0] if dims else None,
-                        "height": dims[1] if dims else None,
-                        "byte_len": len(b),
-                        "sha256": hashlib.sha256(b).hexdigest(),
-                        "valid": dims is not None,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return media.select(id_col, blob_col).mapInPandas(op, schema=MEDIA_SCHEMA)
 
 
 def encode_bmp(px: np.ndarray) -> bytes:
@@ -174,82 +113,6 @@ def _wav_decode(b: bytes) -> tuple[np.ndarray, int] | None:
     return samples.astype(np.float32) / 32768.0, rate
 
 
-FEATURE_DIM = 16
-FEATURES_SCHEMA = "media_id long, features array<float>, real boolean"
-
-
-def image_features(px: np.ndarray) -> np.ndarray:
-    """16-dim: per-channel mean+std (6), 3×3 luminance grid (9), aspect (1).
-    All in [0,1]-ish units, float32, deterministic."""
-    h, w = px.shape[:2]
-    f = np.empty(FEATURE_DIM, dtype=np.float32)
-    pxf = px.astype(np.float32) / 255.0
-    f[0:3] = pxf.mean(axis=(0, 1))
-    f[3:6] = pxf.std(axis=(0, 1))
-    lum = pxf @ np.array([0.299, 0.587, 0.114], dtype=np.float32)
-    ys = np.linspace(0, h, 4).astype(int)
-    xs = np.linspace(0, w, 4).astype(int)
-    grid = [
-        lum[ys[r] : max(ys[r + 1], ys[r] + 1), xs[c] : max(xs[c + 1], xs[c] + 1)].mean()
-        for r in range(3) for c in range(3)
-    ]
-    f[6:15] = grid
-    f[15] = w / h
-    return f
-
-
-def audio_features(samples: np.ndarray, rate: int) -> np.ndarray:
-    """16-dim: duration, RMS, zero-crossing rate, peak, 8 log-energy rFFT
-    bands, 4 quartile mean-abs values. Deterministic."""
-    f = np.zeros(FEATURE_DIM, dtype=np.float32)
-    n = len(samples)
-    if n == 0:
-        return f
-    f[0] = n / rate
-    f[1] = float(np.sqrt(np.mean(samples**2)))
-    f[2] = float(np.mean(np.abs(np.diff(np.signbit(samples).astype(np.int8)))))
-    f[3] = float(np.max(np.abs(samples)))
-    spec = np.abs(np.fft.rfft(samples))
-    bands = np.array_split(spec, 8)
-    f[4:12] = [np.log1p(band.sum()) for band in bands]
-    quarts = np.array_split(np.abs(samples), 4)
-    f[12:16] = [q.mean() for q in quarts]
-    return f
-
-
-def extract_features(media: DataFrame, id_col: str = "media_id",
-                     blob_col: str = "blob") -> DataFrame:
-    """Feature extraction: REAL decode+features for BMP (pixels) and PCM
-    WAV (samples) — pure numpy, golden-value tested. Compressed formats
-    (PNG/JPEG/...) fall back to a deterministic content-hash stand-in with
-    ``real=false`` — that path is where a CNN/CLIP/codec worker plugs in;
-    the batching, schema, and shuffle shape are identical.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, feats, real = [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[blob_col]):
-                b = bytes(blob) if blob is not None else b""
-                px = _bmp_decode(b)
-                wav = None if px is not None else _wav_decode(b)
-                if px is not None:
-                    feats.append(image_features(px))
-                    real.append(True)
-                elif wav is not None:
-                    feats.append(audio_features(*wav))
-                    real.append(True)
-                else:
-                    seed = int.from_bytes(hashlib.sha256(b).digest()[:8], "little")
-                    rng = np.random.RandomState(seed % (2**32))
-                    feats.append(rng.standard_normal(FEATURE_DIM).astype(np.float32))
-                    real.append(False)
-                ids.append(int(mid))
-            yield pd.DataFrame({"media_id": ids, "features": feats, "real": real})
-
-    return media.select(id_col, blob_col).mapInPandas(op, schema=FEATURES_SCHEMA)
-
-
 IMAGE_STATS_SCHEMA = (
     "media_id long, width int, height int, sum_r long, sum_g long, sum_b long"
 )
@@ -265,7 +128,7 @@ def image_channel_stats(media: DataFrame, id_col: str = "media_id",
     row key decodes to sums the oracle reproduces in closed form, proving
     header parse, stride/padding handling, bottom-up flip, and BGR→RGB
     against an implementation-independent mirror. Non-BMP blobs are
-    dropped (count upstream via decode_image_meta.valid)."""
+    dropped."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -2,12 +2,13 @@
 
 Per BASELINE.json north_star: 60-bit SimHash over distinct normalized
 tokens, candidate pairs found with the pigeonhole principle — split the
-signature into ``hamming_max + 1`` chunks and equi-join on any equal
-chunk. Pigeonhole blocking is *exact*: two signatures within Hamming
-distance d must agree on at least one of d+1 chunks, so candidate recall
-is 1.0 by construction (unlike MinHash-LSH's probabilistic bands). The
-chunk join is the same blocking-key pattern as the reference's per-rule
-term lookups (/root/reference/src/deduplicateQueryBuilder.js:75-107).
+signature into ``simhash_blocks`` blocks and equi-join on every
+combination of ``simhash_blocks - hamming_max`` of them. The blocking is
+*exact*: two signatures within Hamming distance d agree on at least that
+many blocks, so candidate recall is 1.0 by construction (unlike
+MinHash-LSH's probabilistic bands). The block join is the same
+blocking-key pattern as the reference's per-rule term lookups
+(src/deduplicateQueryBuilder.js:75-107).
 
 Token hash: low 60 bits of md5 (first 15 hex chars) — chosen because it is
 reproducible in any engine (the DuckDB oracle computes the identical
@@ -20,6 +21,7 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Iterator
+from itertools import combinations
 
 import numpy as np
 import pandas as pd
@@ -124,52 +126,34 @@ def with_simhash(docs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id",
 def _blocking_keys(cfg: DedupConfig) -> list:
     """Compile-time list of blocking-key Column expressions.
 
-    ``pigeonhole``: d+1 chunks of bits/(d+1) bits — any one chunk clean.
-    Minimal explode factor (4 rows/doc at d=3) but narrow 15-bit keys:
-    random-pair collision ≈ 4·2⁻¹⁵ per doc pair, so candidate volume grows
-    quadratically at extreme corpus sizes.
-
-    ``multiblock``: m=simhash_blocks blocks; a pair within distance d has
-    ≥ m−d clean blocks, so joining on every C(m, m−d) combination of m−d
-    blocks is still EXACT (recall 1.0) with much wider keys — m=6, d=3
-    gives 20 combinations of 30-bit keys (collision ≈ 20·2⁻³⁰): ~5 orders
-    of magnitude fewer random candidates for a 5× explode factor. This is
-    the 100 TB setting (measured curves in PLANS.md §SimHash).
+    m=simhash_blocks blocks; a pair within distance d has ≥ m−d clean
+    blocks, so joining on every C(m, m−d) combination of m−d blocks is
+    EXACT (recall 1.0) with wide keys — m=6, d=3 gives 20 combinations of
+    30-bit keys (collision ≈ 20·2⁻³⁰), ~5 orders of magnitude fewer random
+    candidates than pigeonhole's d+1 single 15-bit chunks, for a 5×
+    explode factor. Measured candidate curves in PLANS.md §7.
     """
-    mask_of = lambda nbits: (1 << nbits) - 1  # noqa: E731
-    if cfg.simhash_blocking == "pigeonhole":
-        n_chunks = cfg.hamming_max + 1
-        chunk_bits = cfg.simhash_bits // n_chunks
-        return [
-            F.shiftright(F.col("simhash"), c * chunk_bits).bitwiseAND(F.lit(mask_of(chunk_bits)))
-            for c in range(n_chunks)
-        ]
-    if cfg.simhash_blocking == "multiblock":
-        from itertools import combinations
-
-        m, d = cfg.simhash_blocks, cfg.hamming_max
-        if m <= d:
-            raise ValueError(f"simhash_blocks={m} must exceed hamming_max={d}")
-        block_bits = cfg.simhash_bits // m
-        mask = mask_of(block_bits)
-        keys = []
-        for combo in combinations(range(m), m - d):
-            kv = F.lit(0).cast("long")
-            for j, c in enumerate(combo):
-                block = F.shiftright(F.col("simhash"), c * block_bits).bitwiseAND(F.lit(mask))
-                kv = kv.bitwiseOR(F.shiftleft(block, j * block_bits))
-            keys.append(kv)
-        return keys
-    raise ValueError(f"unknown simhash_blocking: {cfg.simhash_blocking}")
+    m, d = cfg.simhash_blocks, cfg.hamming_max
+    if m <= d:
+        raise ValueError(f"simhash_blocks={m} must exceed hamming_max={d}")
+    block_bits = cfg.simhash_bits // m
+    mask = (1 << block_bits) - 1
+    keys = []
+    for combo in combinations(range(m), m - d):
+        kv = F.lit(0).cast("long")
+        for j, c in enumerate(combo):
+            block = F.shiftright(F.col("simhash"), c * block_bits).bitwiseAND(F.lit(mask))
+            kv = kv.bitwiseOR(F.shiftleft(block, j * block_bits))
+        keys.append(kv)
+    return keys
 
 
 def hamming_pairs(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """All pairs (src < dst) with Hamming(simhash) <= hamming_max.
 
-    Exact blocking join (strategy per ``cfg.simhash_blocking`` — see
-    :func:`_blocking_keys`), then JVM-side popcount verification:
-    ``bit_count(s1 ^ s2)`` — whole-stage codegen, no Python. The result
-    set is identical under either blocking; only candidate volume differs.
+    Exact multi-block blocking join (:func:`_blocking_keys`), then JVM-side
+    popcount verification: ``bit_count(s1 ^ s2)`` — whole-stage codegen,
+    no Python.
     """
     # the self-join below expands the signature plan once per side; every
     # caller passes a live with_simhash plan, so materialize the (doc,

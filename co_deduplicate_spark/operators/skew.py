@@ -43,33 +43,14 @@ def salted_count(df: DataFrame, keys: list[str], disambiguator: Column,
     return partial.groupBy(*keys).agg(F.sum("_partial").alias("count"))
 
 
-def salted_collect_set(df: DataFrame, keys: list[str], value_col: str,
-                       disambiguator: Column, n_salts: int = 16) -> DataFrame:
-    """array_sort(collect_set(value)) per key, salt-spread.
-
-    This is the skew-safe form of the cluster aggregates (A3/A4 chain and
-    sources): a pathological mega-cluster otherwise funnels every member
-    into a single reducer. Partials collect per (key, salt); the finalize
-    stage flattens n_salts small arrays per key.
-    """
-    partial = (
-        with_salt(df, disambiguator, n_salts)
-        .groupBy(*keys, "_salt")
-        .agg(F.collect_set(value_col).alias("_partial"))
-    )
-    return partial.groupBy(*keys).agg(
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("_partial")))).alias(
-            f"set_{value_col}"
-        )
-    )
-
-
 def salted_collect_sets(df: DataFrame, keys: list[str], value_cols: list[str],
                         disambiguator: Column, n_salts: int = 16) -> DataFrame:
-    """Multi-column :func:`salted_collect_set` in ONE two-stage aggregation:
-    per key, ``set_<col> = array_sort(collect_set(col))`` for every value
-    column plus a ``count`` of input rows. This is the cluster-aggregate
-    workhorse (pipeline stage 5 / business view): a mega-cluster's members
+    """``array_sort(collect_set(col))`` per key for every value column,
+    salt-spread, in ONE two-stage aggregation: ``set_<col>`` per value
+    column plus a ``count`` of input rows. Partials collect per (key,
+    salt); the finalize stage flattens n_salts small arrays per key. This
+    is the skew-safe cluster aggregate (A3/A4 chain and sources,
+    plans/business_view.py::cluster_table): a mega-cluster's members
     spread over ``n_salts`` partial reducers instead of funnelling into one.
     """
     partial = (

@@ -150,8 +150,7 @@ def suffix_window_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str =
     C(k,2) join rows, so a site-wide footer on 10⁶ pages is 5·10¹¹ pairs —
     AQE splits partitions but cannot shrink that quadratic candidate set.
     With the cap, window keys whose document frequency exceeds N are
-    dropped from the join entirely (the jaccard_pairs max_df pattern,
-    operators/jaccard.py). Trade-off, stated plainly: a pair whose ONLY
+    dropped from the join entirely. Trade-off, stated plainly: a pair whose ONLY
     shared windows are ubiquitous boilerplate is missed, and surviving
     pairs' ``shared_windows`` counts exclude dropped windows. The dropped
     key count is logged — never silent.

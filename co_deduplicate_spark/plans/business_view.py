@@ -17,10 +17,21 @@ affected document with:
                            neighbor (painless 216-218: duplicates entries
                            with empty rules)
 
-This module computes the same view as one batch join of the pipeline's
-stage tables (labels + edges + corpus) — the declarative equivalent of the
-server-side script. A9 existence predicates (helpers.js:120-149) fall out
-as column expressions over the assembled arrays.
+Two functions share the work, as the reference computes each affected
+cluster's aggregate once and then rewrites its members
+(documentsManager.js:287-289, painless 216-218):
+
+  :func:`cluster_table`  one row per cluster — chain, members, sources,
+                         size, truncated, is_duplicate. The pipeline stores
+                         it as the ``clusters`` stage table.
+  :func:`record_view`    the per-record assembly over a cluster table plus
+                         the labels, edges and corpus. The pipeline's
+                         enriched stage runs it over the STORED clusters
+                         table, so the labels are aggregated once per run.
+
+:func:`business_view` is the two composed, for callers that hold only the
+labels. A9 existence predicates (helpers.js:120-149) fall out as column
+expressions over the assembled arrays.
 """
 
 from __future__ import annotations
@@ -28,29 +39,95 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.exact import chain_expr
 from ..operators.skew import salted_collect_sets, salted_count
+
+
+def cluster_table(labels: DataFrame, corpus: DataFrame, n_salts: int = 16,
+                  max_members: int | None = None) -> DataFrame:
+    """Cluster aggregates (A3/A4 + isDuplicate), one row per component.
+
+    labels: (node, component); corpus: (url, source, ...). Returns
+    ``cluster_id, chain, members, sources, size, truncated, is_duplicate``.
+
+    Skew-safe: member lists and sources are salted two-stage collects
+    (operators/skew.py), so a mega-cluster's members spread over
+    ``n_salts`` partial reducers. ``max_members=None`` collects every
+    cluster in that one aggregation (exact reference semantics). With an
+    int, a salted count comes first and only clusters of at most
+    ``max_members`` are collected: a boilerplate mega-cluster never
+    materializes a member array or chain string, even transiently, and
+    keeps its size, a placeholder chain, empty members/sources and
+    ``truncated=true``.
+
+    Precondition: ``corpus`` has one row per url (the pipeline's corpus
+    and the url-keyed UpsertTable both guarantee it); it is not checked.
+    Sizes count member rows joined to ``corpus``, so a duplicated url
+    inflates its cluster's size and can flip is_duplicate and the chain.
+    """
+    members = labels.join(corpus.select(F.col("url").alias("node"), "source"), "node", "left")
+    sizes = None
+    if max_members is not None:
+        # feeds both the semi-join and the truncated rows
+        sizes = salted_count(members, ["component"], F.col("node"), n_salts).localCheckpoint()
+        members = members.join(
+            sizes.filter(F.col("count") <= max_members).select("component"),
+            "component", "left_semi",
+        )
+    clusters = salted_collect_sets(
+        members, ["component"], ["node", "source"], F.col("node"), n_salts
+    ).select(
+        F.col("component").alias("cluster_id"),
+        chain_expr(F.col("set_node")).alias("chain"),
+        F.col("set_node").alias("members"),
+        F.col("set_source").alias("sources"),
+        F.col("count").alias("size"),
+        F.lit(False).alias("truncated"),
+    )
+    if sizes is not None:
+        clusters = clusters.unionByName(sizes.filter(F.col("count") > max_members).select(
+            F.col("component").alias("cluster_id"),
+            F.concat(F.lit("!truncated:"), F.col("component"), F.lit(":"),
+                     F.col("count"), F.lit("!")).alias("chain"),
+            F.array().cast("array<string>").alias("members"),
+            F.array().cast("array<string>").alias("sources"),
+            F.col("count").alias("size"),
+            F.lit(True).alias("truncated"),
+        ))
+    return clusters.withColumn("is_duplicate", F.col("size") >= 2)
 
 
 def business_view(corpus: DataFrame, labels: DataFrame, edges: DataFrame,
                   signatures: DataFrame | None = None, n_salts: int = 16,
                   max_members_inline: int | None = None) -> DataFrame:
-    """Assemble the per-record business view.
+    """The per-record business view from the labels alone:
+    :func:`record_view` over ``cluster_table(labels, corpus, n_salts,
+    max_members_inline)``. Arguments as for :func:`record_view`."""
+    clusters = cluster_table(labels, corpus, n_salts, max_members_inline)
+    return record_view(clusters, corpus, labels, edges, signatures=signatures,
+                       n_salts=n_salts, max_members_inline=max_members_inline)
 
-    corpus: (url, source, session, ...); labels: (node, component);
-    edges: (src, dst, rules, session); signatures: (doc, minhash, ...) —
-    NULL minhash ⇒ not deduplicable (optional; default everyone deduplicable).
 
-    Skew: cluster-level member/source sets go through salted two-stage
-    aggregation (operators/skew.py), and — like pipeline.py stage 5 —
-    components larger than ``max_members_inline`` are filtered out BEFORE
-    the collect, so a mega-cluster's member set is never materialized even
-    transiently. ``max_members_inline`` also caps the per-record adjacency:
-    records in clusters larger than the cap keep at most that many DIRECT
-    neighbors in ``duplicates`` (deterministic: the lowest neighbor ids),
-    plus a placeholder sourceUidChain, empty ``sources``, and
-    ``truncated=true`` — the reference materializes the full adjacency per
-    doc (painless 198-211), which is O(size²) rows per cluster and cannot
-    be allowed for boilerplate mega-clusters at 100 TB.
+def record_view(clusters: DataFrame, corpus: DataFrame, labels: DataFrame,
+                edges: DataFrame, signatures: DataFrame | None = None,
+                n_salts: int = 16, max_members_inline: int | None = None) -> DataFrame:
+    """Assemble the per-record business view over a cluster table.
+
+    clusters: :func:`cluster_table` output for the same labels and the
+    same cap; corpus: (url, source, session, ...); labels: (node,
+    component); edges: (src, dst, rules, session); signatures: (doc,
+    minhash, ...) — NULL minhash ⇒ not deduplicable (optional; default
+    everyone deduplicable).
+
+    Each record reads its cluster's chain, sources, size and truncated
+    flag from ``clusters``; its transitive duplicates are the cluster's
+    members that are not direct neighbours. ``max_members_inline`` also
+    caps the per-record adjacency: records with more direct neighbours
+    than the cap keep the lowest ``max_members_inline`` neighbour ids in
+    ``duplicates`` — the reference materializes the full adjacency per doc
+    (painless 198-211), which is O(size²) rows per cluster and cannot be
+    allowed for boilerplate mega-clusters at 100 TB. A truncated cluster
+    stores no members, so its records list direct neighbours only.
 
     ``isDuplicate``/``hasTransDuplicate`` are derived from cluster size and
     FULL direct degree, so truncation never flips them: a truncated member
@@ -58,12 +135,6 @@ def business_view(corpus: DataFrame, labels: DataFrame, edges: DataFrame,
     (it IS in a duplicate cluster — reference painless 216-218).
 
     Default ``max_members_inline=None`` preserves exact reference semantics.
-
-    Precondition: ``corpus`` has one row per url (the pipeline's corpus
-    and the url-keyed UpsertTable both guarantee it); it is not checked.
-    With ``max_members_inline=None`` cluster sizes are counted over member
-    rows joined to ``corpus``, so a duplicated url inflates its cluster's
-    size and can flip isDuplicate, hasTransDuplicate and the chain.
     """
     # direct neighbors with provenance, both directions (the reference's
     # adjacency list is symmetric: each member stores its own copy)
@@ -74,41 +145,6 @@ def business_view(corpus: DataFrame, labels: DataFrame, edges: DataFrame,
     nbrs = fwd.unionByName(rev)
 
     member_of = labels.select(F.col("node").alias("url"), "component")
-    src_of = corpus.select("url", "source", F.col("session").alias("own_session"))
-
-    if max_members_inline is not None:
-        # cluster sizes first (salted count — cheap, no arrays); member/
-        # source sets are collected only for components under the cap
-        sizes = salted_count(member_of, ["component"], F.col("url"), n_salts).select(
-            "component", F.col("count").alias("_csize")
-        ).localCheckpoint()  # feeds both the filter and the join
-        small_members = member_of.join(
-            sizes.filter(F.col("_csize") <= max_members_inline).select("component"),
-            "component", "left_semi",
-        )
-        cluster_sets = salted_collect_sets(
-            small_members.join(src_of.select("url", "source"), "url", "left"),
-            ["component"], ["url", "source"], F.col("url"), n_salts,
-        ).select(
-            "component",
-            F.col("set_url").alias("members"),
-            F.col("set_source").alias("sources"),
-        )
-    else:
-        # r6 (guide §2.4): uncapped path — salted_collect_sets already
-        # counts input rows per component, so the separate salted_count
-        # (two more shuffles + one more join) was redundant; sizes and
-        # sets come from ONE two-stage aggregation.
-        full = salted_collect_sets(
-            member_of.join(src_of.select("url", "source"), "url", "left"),
-            ["component"], ["url", "source"], F.col("url"), n_salts,
-        ).localCheckpoint()
-        sizes = full.select("component", F.col("count").alias("_csize"))
-        cluster_sets = full.select(
-            "component",
-            F.col("set_url").alias("members"),
-            F.col("set_source").alias("sources"),
-        )
 
     if max_members_inline is None:
         # exact path: one aggregation, full adjacency per record
@@ -163,22 +199,10 @@ def business_view(corpus: DataFrame, labels: DataFrame, edges: DataFrame,
         )
 
     base = (
-        member_of.join(sizes, "component")
-        .join(cluster_sets, "component", "left")
+        member_of.join(clusters.withColumnRenamed("cluster_id", "component"), "component")
         .join(direct, "url", "left")
-        .join(src_of, "url", "left")
+        .join(corpus.select("url", F.col("session").alias("own_session")), "url", "left")
     )
-
-    truncated = (
-        (F.col("_csize") > max_members_inline) if max_members_inline is not None
-        else F.lit(False)
-    )
-    members_eff = F.when(truncated, F.array(F.col("url"))).otherwise(F.col("members"))
-    chain = F.when(
-        truncated,
-        F.concat(F.lit("!truncated:"), F.col("component"), F.lit(":"),
-                 F.col("_csize"), F.lit("!")),
-    ).otherwise(F.concat(F.lit("!"), F.concat_ws("!", F.col("members")), F.lit("!")))
 
     direct_nbr_urls = F.transform(F.coalesce(F.col("_direct"), F.array()), lambda d: d["nbr"])
     # duplicates = every other cluster member; direct neighbors keep their
@@ -188,7 +212,7 @@ def business_view(corpus: DataFrame, labels: DataFrame, edges: DataFrame,
         F.concat(
             F.coalesce(F.col("_direct"), F.array()),
             F.transform(
-                F.array_except(members_eff, F.array_union(direct_nbr_urls, F.array(F.col("url")))),
+                F.array_except(F.col("members"), F.array_union(direct_nbr_urls, F.array(F.col("url")))),
                 lambda m: F.struct(
                     m.alias("nbr"),
                     F.array().cast("array<string>").alias("rules"),
@@ -202,18 +226,18 @@ def business_view(corpus: DataFrame, labels: DataFrame, edges: DataFrame,
     out = base.select(
         "url",
         F.col("component").alias("cluster_id"),
-        chain.alias("sourceUidChain"),
+        F.col("chain").alias("sourceUidChain"),
         F.coalesce(F.col("sources"), F.array().cast("array<string>")).alias("sources"),
         duplicates.alias("duplicates"),
         F.coalesce(F.col("duplicateRules"), F.array().cast("array<string>")).alias("duplicateRules"),
         F.col("own_session"),
-        truncated.alias("truncated"),
+        "truncated",
         # flags from cluster size + FULL degree, not the (possibly capped)
         # inline arrays — truncation never flips them (painless 216-218:
         # membership in a >=2 cluster IS isDuplicate; a member with more
         # cluster-mates than direct neighbors has a transitive duplicate)
-        (F.col("_csize") >= 2).alias("isDuplicate"),
-        ((F.col("_csize") - 1) > F.coalesce(F.col("_n_direct_full"), F.lit(0)))
+        F.col("is_duplicate").alias("isDuplicate"),
+        ((F.col("size") - 1) > F.coalesce(F.col("_n_direct_full"), F.lit(0)))
         .alias("hasTransDuplicate"),
     )
     if signatures is not None:
@@ -253,9 +277,3 @@ def with_session_predicates(view: DataFrame, current_session: str) -> DataFrame:
         )
     )
 
-
-def has_duplicate_from_other_session(view: DataFrame, current_session: str):
-    """Back-compat wrapper for the single-predicate form (helpers.js:120-126)."""
-    return with_session_predicates(view, current_session).drop(
-        "hasOwnDuplicateFromOtherSession", "hasTransDuplicateFromOtherSession"
-    )

@@ -12,8 +12,9 @@ the reference's per-record update + version-conflict retry loop
                                    the reference's matched_queries P11)
         ─ connected components ─→ cluster_labels(url, component)
         ─ cluster aggregates ─→ clusters(cluster_id, chain, members,
-                                   sources, size, is_duplicate)
-        ─ business view ─→ enriched (optional per-record write-back)
+                                   sources, size, truncated, is_duplicate)
+        ─ business view over the stored clusters table
+                             ─→ enriched (optional per-record write-back)
 
 Stage table and loop: each stage is one pure function (``corpus_stage``,
 ``signatures_stage``, ``candidate_edges_stage``, ``cluster_labels_stage``,
@@ -26,6 +27,10 @@ write — with the aggregates attached through ``DataFrame.observe``, so
 the write job itself computes them and no stage runs a counting job —
 the manifest counters, and the lineage record, always the stage's last
 call. The candidate stage's engines are one table too, :data:`ENGINES`.
+The clusters and enriched stages share one cluster aggregate
+(plans/business_view.py::cluster_table): the enriched stage reads chain,
+members, sources and size from the stored clusters table instead of
+re-aggregating the labels.
 
 Cluster fields mirror the reference's rewrite outputs: chain ≡
 ``business.sourceUidChain`` (documentsManager.js:287-289), sources ≡
@@ -56,12 +61,11 @@ from pyspark.sql import functions as F
 from ..config import DedupConfig
 from ..functions.extract import extracted_text
 from ..operators.connected_components import attach_singletons, connected_components
-from ..operators.exact import chain_expr
 from ..operators.jaccard import verify_candidates
 from ..operators.lsh import band_table, candidate_pairs, hot_buckets
 from ..operators.minhash import with_minhash
-from ..operators.skew import salted_collect_sets, salted_count
 from ..sources.catalog import StageCatalog
+from .business_view import cluster_table, record_view
 
 # (frame to store, counters computed eagerly, lineage aggregates)
 StageOutput = tuple[DataFrame, dict, dict[str, Column]]
@@ -328,49 +332,10 @@ def cluster_labels_stage(edges: DataFrame, corpus: DataFrame,
 
 
 def clusters_stage(labels: DataFrame, corpus: DataFrame, cfg: DedupConfig) -> StageOutput:
-    """Cluster table (A3/A4 aggregates + flags).
-
-    Skew-safe: member lists/sources are salted two-stage collects
-    (operators/skew.py), and clusters above chain_max_members never
-    materialize a member array or chain string at all — a boilerplate
-    mega-cluster at 100× otherwise funnels every member into a single
-    reducer and builds an unbounded chain. Capped clusters keep size and
-    a placeholder chain; the cap is logged to lineage, never silent."""
-    member_meta = labels.join(
-        corpus.select(F.col("url").alias("node"), "source"), "node", "left"
-    )
-    sizes = salted_count(
-        member_meta, ["component"], F.col("node"), cfg.salt_buckets
-    ).localCheckpoint()
-    small = member_meta.join(
-        sizes.filter(F.col("count") <= cfg.chain_max_members).select("component"),
-        "component", "left_semi",
-    )
-    agg = salted_collect_sets(
-        small, ["component"], ["node", "source"], F.col("node"), cfg.salt_buckets
-    )
-    clusters_small = agg.select(
-        F.col("component").alias("cluster_id"),
-        chain_expr(F.col("set_node")).alias("chain"),
-        F.col("set_node").alias("members"),
-        F.col("set_source").alias("sources"),
-        F.col("count").alias("size"),
-        F.lit(False).alias("truncated"),
-    )
-    clusters_big = sizes.filter(F.col("count") > cfg.chain_max_members).select(
-        F.col("component").alias("cluster_id"),
-        F.concat(
-            F.lit("!truncated:"), F.col("component"), F.lit(":"),
-            F.col("count"), F.lit("!")
-        ).alias("chain"),
-        F.array().cast("array<string>").alias("members"),
-        F.array().cast("array<string>").alias("sources"),
-        F.col("count").alias("size"),
-        F.lit(True).alias("truncated"),
-    )
-    clusters = clusters_small.unionByName(clusters_big).withColumn(
-        "is_duplicate", F.col("size") >= 2
-    )
+    """Cluster table (A3/A4 aggregates + flags), :func:`cluster_table`
+    capped at ``cfg.chain_max_members``; the cap is logged to lineage,
+    never silent."""
+    clusters = cluster_table(labels, corpus, cfg.salt_buckets, cfg.chain_max_members)
     return clusters, {"chain_max_members": cfg.chain_max_members}, {
         "duplicate_clusters": F.sum(F.col("is_duplicate").cast("long")),
         "capped_clusters": F.sum(F.col("truncated").cast("long")),
@@ -378,22 +343,23 @@ def clusters_stage(labels: DataFrame, corpus: DataFrame, cfg: DedupConfig) -> St
     }
 
 
-def enriched_stage(corpus: DataFrame, labels: DataFrame, edges: DataFrame,
-                   signatures: DataFrame, cfg: DedupConfig) -> StageOutput:
+def enriched_stage(clusters: DataFrame, corpus: DataFrame, labels: DataFrame,
+                   edges: DataFrame, signatures: DataFrame, cfg: DedupConfig) -> StageOutput:
     """Per-record enriched write-back (S3/S8/G4).
 
     The reference's true end state: every document rewritten with its
     duplicates adjacency, chain, sources, rules provenance, and S7 date
     stamps (painless/updateDuplicatesGraph.painless:160-232 +
-    setCreationAndModificationDate.painless). :func:`run_pipeline` stores
+    setCreationAndModificationDate.painless). It reads chain, members,
+    sources, size and the cap from the stored clusters table, so the
+    labels are not aggregated a second time. :func:`run_pipeline` stores
     it through the keyed UpsertTable (MERGE semantics, atomic snapshot
     flip) so a reader sees exactly what an ES reader of the reference
     would."""
     from ..sources.upsert import ingest_defaults
-    from .business_view import business_view
 
-    view = business_view(
-        corpus, labels, edges, signatures=signatures,
+    view = record_view(
+        clusters, corpus, labels, edges, signatures=signatures,
         n_salts=cfg.salt_buckets, max_members_inline=cfg.chain_max_members,
     )
     return ingest_defaults(view, uid_col="url", source_col=None), {}, {}
@@ -499,8 +465,8 @@ def run_pipeline(
 
         table = UpsertTable(spark, str(Path(workdir) / "documents_enriched"), key="url")
         stages.append(("enriched", lambda: enriched_stage(
-            out["corpus"], out["cluster_labels"], out["candidate_edges"],
-            out["signatures"], cfg)))
+            out["clusters"], out["corpus"], out["cluster_labels"],
+            out["candidate_edges"], out["signatures"], cfg)))
 
     for name, build in stages:
         # the enriched stage lives in the UpsertTable, every other in the catalog

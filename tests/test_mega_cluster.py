@@ -104,3 +104,24 @@ def test_business_view_truncates_mega(spark, pages, tmp_path):
     assert hub is not None and hub["truncated"] is True
     expect = sorted(f"https://mega.example.org/p/{i}" for i in range(1, N_MEGA))[:100]
     assert sorted(d["nbr"] for d in hub["duplicates"]) == expect
+
+
+def test_enriched_stage_matches_business_view(spark, pages, tmp_path):
+    # the enriched stage reads chain, members, sources and size from the
+    # stored clusters table; it must equal the standalone view, which
+    # aggregates the labels itself, on truncated and normal clusters alike
+    out = run_pipeline(spark, pages, str(tmp_path / "wk3"), CFG, enriched=True)
+    view = business_view(
+        out["corpus"], out["cluster_labels"], out["candidate_edges"],
+        signatures=out["signatures"], max_members_inline=CFG.chain_max_members,
+    )
+
+    def rows(df):
+        # collect_list order inside `duplicates` is not part of the contract
+        return sorted(df.select(*view.columns).withColumn(
+            "duplicates", F.array_sort("duplicates")).collect())
+
+    got = rows(out["enriched"])
+    assert got == rows(view)
+    assert len(got) == N_NORMAL + N_MEGA
+    assert {r["truncated"] for r in got} == {True, False}

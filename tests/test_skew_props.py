@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from co_deduplicate_spark.config import DedupConfig
 from co_deduplicate_spark.operators.minhash import minhash_py, shingles_py
-from co_deduplicate_spark.operators.skew import salted_collect_set, salted_count
+from co_deduplicate_spark.operators.skew import salted_collect_sets, salted_count
 from co_deduplicate_spark.operators.substring import suffix_window_pairs
 
 CFG = DedupConfig()
@@ -35,17 +35,24 @@ def test_salted_count_matches_plain(spark, skewed):
 
 
 def test_salted_collect_set_matches_plain(spark):
-    rows = [("a", f"m{i % 7}") for i in range(1000)] + [("b", "x")]
-    df = spark.createDataFrame(rows, "key string, member string")
+    rows = [("a", f"m{i % 7}", f"s{i % 3}") for i in range(1000)] + [("b", "x", None)]
+    df = spark.createDataFrame(rows, "key string, member string, source string")
     plain = {
-        r["key"]: r["s"]
-        for r in df.groupBy("key").agg(F.array_sort(F.collect_set("member")).alias("s")).collect()
+        r["key"]: (r["m"], r["s"], r["n"])
+        for r in df.groupBy("key").agg(
+            F.array_sort(F.collect_set("member")).alias("m"),
+            F.array_sort(F.collect_set("source")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        ).collect()
     }
     salted = {
-        r["key"]: r["set_member"]
-        for r in salted_collect_set(df, ["key"], "member", F.col("member"), n_salts=4).collect()
+        r["key"]: (r["set_member"], r["set_source"], r["count"])
+        for r in salted_collect_sets(
+            df, ["key"], ["member", "source"], F.col("member"), n_salts=4
+        ).collect()
     }
     assert salted == plain
+    assert salted["b"] == (["x"], [], 1)
 
 
 # ------------------------------------------------- substring shared windows

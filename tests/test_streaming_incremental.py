@@ -1,18 +1,11 @@
-"""Streaming dedup, incremental session semantics (G2), multimodal plumbing."""
+"""Streaming dedup and incremental session semantics (G2)."""
 
 from __future__ import annotations
-
-import struct
-import zlib
 
 import pytest
 from pyspark.sql import functions as F
 
 from co_deduplicate_spark.config import DedupConfig
-from co_deduplicate_spark.operators.multimodal import (
-    decode_image_meta,
-    extract_features,
-)
 from co_deduplicate_spark.sources.pages import PAGES_SCHEMA, synth_pages
 from co_deduplicate_spark.streaming.incremental import incremental_update, session_edges
 from co_deduplicate_spark.streaming.stream_dedup import stream_exact_dedup
@@ -91,40 +84,6 @@ def test_incremental_update_merges_and_scopes(spark):
     # only cluster A was touched
     affected = {r["component"] for r in out["affected_components"].collect()}
     assert affected == {"a1"}
-
-
-# ------------------------------------------------------------- multimodal
-def _tiny_png(w: int, h: int) -> bytes:
-    ihdr = struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
-    chunk = b"IHDR" + ihdr
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", len(ihdr))
-        + chunk
-        + struct.pack(">I", zlib.crc32(chunk))
-    )
-
-
-def test_multimodal_decode_and_dedup(spark):
-    rows = [
-        (1, _tiny_png(64, 32)),
-        (2, _tiny_png(64, 32)),       # exact dup of 1
-        (3, _tiny_png(128, 128)),
-        (4, b"not an image"),
-        (5, None),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, blob binary")
-    meta = {r["media_id"]: r for r in decode_image_meta(media).collect()}
-    assert meta[1]["kind"] == "png" and (meta[1]["width"], meta[1]["height"]) == (64, 32)
-    assert meta[3]["width"] == 128
-    assert meta[4]["valid"] is False and meta[4]["kind"] == "unknown"
-    assert meta[5]["byte_len"] == 0
-    assert meta[1]["sha256"] == meta[2]["sha256"]
-
-    feats = {r["media_id"]: r["features"] for r in extract_features(media).collect()}
-    assert feats[1] == feats[2]          # deterministic: same bytes → same features
-    assert feats[1] != feats[3]
-    assert len(feats[1]) == 16
 
 
 def test_incremental_recrawl_newest_wins(spark):

@@ -20,7 +20,7 @@ risk from hashing either way). Each round localCheckpoints to cut lineage
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
@@ -67,15 +67,21 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return rewired.union(kept).filter(F.col("u") != F.col("v")).distinct()
 
 
-def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
+def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """localCheckpoint the edges; the convergence checksum (count +
+    order-insensitive xxhash64 sum) is observed by the checkpoint job
+    itself, no separate collect."""
     # decimal(38,0) accumulator: ANSI mode (Spark 4 default) would overflow
     # a long sum of 64-bit hashes.
     h = F.xxhash64(F.greatest("u", "v"), F.least("u", "v")).cast("decimal(38,0)")
-    row = edges.select(
+    obs = Observation()
+    e = edges.observe(
+        obs,
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(h), F.lit(0)).cast("decimal(38,0)").alias("h"),
-    ).collect()[0]
-    return row["n"], int(row["h"])
+    ).localCheckpoint()
+    got = obs.get
+    return e, (got["n"], int(got["h"]))
 
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -95,15 +101,9 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     pair = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if pair.schema[0].dataType != pair.schema[1].dataType:
         pair = pair.select(F.col("u").cast("string"), F.col("v").cast("string"))
-    e = (
-        pair.filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev = _edge_checksum(e)
+    e, prev = _checkpoint(pair.filter(F.col("u") != F.col("v")).distinct())
     for it in range(cfg.cc_max_iterations):
-        e = _small_star(_large_star(e)).localCheckpoint()
-        cur = _edge_checksum(e)
+        e, cur = _checkpoint(_small_star(_large_star(e)))
         if cur == prev:
             break
         prev = cur

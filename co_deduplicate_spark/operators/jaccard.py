@@ -8,6 +8,11 @@ analogue of the reference's inverted-index candidate retrieval
 (/root/reference/src/deduplicateQueryBuilder.js:75-107: every ``match``
 clause is a Lucene term lookup).
 
+Shingle sets are one field of the shared Arrow text kernel
+(:func:`token_sets`). ``verify_candidates`` is the shingle sets of the
+candidate docs, then the :func:`verify_pairs` join half; the pipeline runs
+the join half directly over its persisted kernel frame.
+
 Scale notes:
   * postings are (token, doc) pairs — the self-join shuffles on token;
     AQE skew-join splits hot tokens.
@@ -17,37 +22,29 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .minhash import text_features
 
 
 def token_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                shingle_k: int = 1) -> DataFrame:
     """(id, tokens array<bigint>, n_tokens) — distinct token k-shingles as
-    64-bit hashes (minhash.py::shingle_hashes, the same memoized
-    blake2b+splitmix kernel the MinHash signatures consume).
+    64-bit hashes: the ``shingles`` field of the shared Arrow text kernel
+    (minhash.py::text_features_udf, the same memoized blake2b+splitmix
+    hashes the MinHash signatures consume).
 
-    Implementation notes:
-      * Arrow-batched pandas UDF, NOT a Catalyst higher-order-function
-        expression. Measured on 200k web pages, the equivalent
-        ``transform(sequence(...), i -> concat_ws(slice(...)))`` expression
-        ran ~30× slower — Spark evaluates HOF lambdas interpreted (no
-        codegen, no CSE across elements).
-      * r6 optimization (guide §2.3 "shuffle fewer bytes" / §4.2): shingles
-        are HASHED in the kernel instead of built as strings. Downstream
-        postings joins shuffle 8-byte longs instead of ~25-40-byte shingle
-        strings, ``array_intersect`` compares longs, and the kernel skips
-        the per-shingle ``" ".join`` entirely (it reuses the vectorized
-        splitmix combine + worker-global token memo). Set cardinalities —
-        and therefore every jaccard_ppm — are unchanged barring a ~2⁻⁶⁴
-        in-document hash collision (the same accepted trade as
-        suffix_window_pairs' rolling-hash keys; the oracle gate re-proves
-        value equality every round). Measured: shingle_jaccard_pairs
-        3.03 → 2.80 s from this change alone (2.15 s in the end-of-round
-        battery), and the kernel feeds every verification path.
+    r6 optimization (guide §2.3 "shuffle fewer bytes" / §4.2): shingles
+    are HASHED in the kernel instead of built as strings. Downstream
+    postings joins shuffle 8-byte longs instead of ~25-40-byte shingle
+    strings, ``array_intersect`` compares longs, and the kernel skips the
+    per-shingle ``" ".join`` entirely. Set cardinalities — and therefore
+    every jaccard_ppm — are unchanged barring a ~2⁻⁶⁴ in-document hash
+    collision (the same accepted trade as suffix_window_pairs'
+    rolling-hash keys; the oracle gate re-proves value equality every
+    round). Measured: shingle_jaccard_pairs 3.03 → 2.80 s from this change
+    alone (2.15 s in the end-of-round battery).
 
     Output schema: ``tokens`` is ``array<bigint>`` (shingle hashes); it
     used to be ``array<string>`` (the shingle text). A consumer that needs
@@ -56,28 +53,9 @@ def token_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     The kernel always accent-folds (tokens_py semantics == the DuckDB
     oracle's strip_accents; folding is the identity on ASCII corpora).
     """
-    import numpy as np
-
-    from ..functions.normalize import tokens_py
-    from .minhash import shingle_hashes
-
-    _EMPTY = np.array([], dtype=np.int64)
-
-    @F.pandas_udf("tokens array<bigint>, n_tokens int")
-    def sh(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for batch in texts:
-            arrs = []
-            for t in batch:
-                hs = shingle_hashes(tokens_py(t), shingle_k)
-                arrs.append(_EMPTY if hs is None else hs.view(np.int64))
-            yield pd.DataFrame(
-                {"tokens": pd.Series(arrs, dtype=object),
-                 "n_tokens": pd.Series([len(a) for a in arrs], dtype="int32")}
-            )
-
-    return docs.select(
-        F.col(id_col).alias("doc"), sh(F.col(text_col)).alias("_s")
-    ).select("doc", F.col("_s.tokens").alias("tokens"), F.col("_s.n_tokens").alias("n_tokens"))
+    return text_features(docs, ("shingles", "n_shingles"), id_col, text_col,
+                         shingle_k=shingle_k).select(
+        "doc", F.col("shingles").alias("tokens"), F.col("n_shingles").alias("n_tokens"))
 
 
 def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -115,11 +93,10 @@ def jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
 def verify_candidates(candidates: DataFrame, docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", threshold: float = 0.8,
                       shingle_k: int = 3, candidates_distinct: bool = False) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs (src, dst).
-
-    Joins each side to its shingle set, intersects via a postings join
-    restricted to candidate pairs — never materializes full cross products.
-    Returns (src, dst, jaccard) for pairs passing the threshold.
+    """Exact-Jaccard verification of candidate pairs (src, dst): the
+    candidate docs' shingle sets (:func:`token_sets`), then
+    :func:`verify_pairs`. Returns (src, dst, jaccard, jaccard_ppm) for
+    pairs passing the threshold.
 
     ``candidates_distinct=True`` (r6, guide §2.4): skip the internal
     dedupe when the caller guarantees unique pairs — every blocking stage
@@ -148,11 +125,19 @@ def verify_candidates(candidates: DataFrame, docs: DataFrame, id_col: str = "doc
     )
     # Shingle-set table feeds both join sides — materialize once.
     ts = token_sets(pruned, id_col, text_col, shingle_k).localCheckpoint()
+    return verify_pairs(cand, ts, threshold)
 
-    # Exact intersection per pair via array_intersect (hash-set, O(n+m))
-    # directly on the two shingle arrays: two shuffle joins keyed on doc id,
-    # no postings explode, no pair-level re-aggregation.
-    out = (
+
+def verify_pairs(cand: DataFrame, ts: DataFrame, threshold: float) -> DataFrame:
+    """The verification joins: distinct (src, dst) pairs against a
+    (doc, tokens, n_tokens) shingle-set frame, which is read once per side
+    (pass a materialized one).
+
+    Exact intersection per pair via array_intersect (hash-set, O(n+m))
+    directly on the two shingle arrays: two shuffle joins keyed on doc id,
+    no postings explode, no pair-level re-aggregation.
+    """
+    return (
         cand.join(
             ts.select(F.col("doc").alias("src"), F.col("tokens").alias("_ta"),
                       F.col("n_tokens").alias("na")),
@@ -170,4 +155,3 @@ def verify_candidates(candidates: DataFrame, docs: DataFrame, id_col: str = "doc
         .filter(F.col("jaccard_ppm") >= int(threshold * 1_000_000))
         .select("src", "dst", "jaccard", "jaccard_ppm")
     )
-    return out

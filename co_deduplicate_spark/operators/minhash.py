@@ -1,10 +1,33 @@
-"""MinHash signatures — Arrow-vectorized pandas UDF (engine 1 of 3).
+"""The one Arrow text kernel, and MinHash signatures (engine 1 of 3).
 
 Generalizes the reference's exact-key blocking (tier-1/tier-2 rules,
 /root/reference/src/deduplicateQueryBuilder.js:75-107 +
 test/functional/dataset/exemples.json rule names) to near-duplicate
 blocking over web text, per BASELINE.json north_star: k-shingle sets and
 128-permutation signatures computed per Arrow batch.
+
+One kernel per document (:func:`text_features_udf`): the reference
+normalizes each match field once, at index time, and then compares exact
+keys (functions/normalize.py); likewise every text feature the engines
+compare comes from ONE tokenization per document, each token hashed once:
+
+  * ``minhash`` + ``n_shingles`` — the signature and its shingle count;
+  * ``shingles`` — the distinct k-shingle hashes the Jaccard verification
+    intersects (operators/jaccard.py);
+  * ``simhash`` — md5-60 votes over the distinct shingle strings
+    (operators/simhash.py);
+  * ``wkeys`` — rolling-hash keys of every w-token window
+    (operators/substring.py).
+
+The kernel emits only the fields its caller asks for. The pipeline asks
+once for the signature fields plus those its selected engines read, and
+persists that frame while they read it (plans/pipeline.py); each public
+operator asks for its own field. Per-document Python over Arrow batches,
+not Catalyst higher-order functions: the equivalent
+``transform(sequence(...), i -> concat_ws(slice(...)))`` shingle
+expression measured ~30× slower on 200k web pages (Spark evaluates HOF
+lambdas interpreted), and the window-key HOF form measured 18.7 s → 3 s
+once moved into the kernel (sf0.1 battery).
 
 Design choices (determinism is a hard requirement — FIXTURES.md §4):
   * base shingle hash: per-token blake2b(digest_size=8) — stable across
@@ -41,16 +64,18 @@ from ..config import DedupConfig
 from ..functions.normalize import tokens_py
 
 
-def shingles_py(text: str | None, k: int) -> list[str]:
-    """Distinct k-token shingles. Shorter-than-k docs collapse to one
-    whole-text shingle (mirrors operators/jaccard.py::token_sets)."""
-    toks = tokens_py(text)
+def _distinct_shingles(toks: list[str], k: int) -> list[str]:
     if not toks:
         return []
     if len(toks) < k:
         return [" ".join(toks)]
-    seen = dict.fromkeys(" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1))
-    return list(seen)
+    return list(dict.fromkeys(" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)))
+
+
+def shingles_py(text: str | None, k: int) -> list[str]:
+    """Distinct k-token shingles, in first-occurrence order. Shorter-than-k
+    docs collapse to one whole-text shingle (as shingle_hashes does)."""
+    return _distinct_shingles(tokens_py(text), k)
 
 
 def shingle_hash(s: str) -> int:
@@ -76,6 +101,10 @@ def token_hash(tok: str) -> int:
     return v
 
 
+def _token_hashes(toks: list[str]) -> np.ndarray:
+    return np.fromiter((token_hash(t) for t in toks), dtype=np.uint64, count=len(toks))
+
+
 _MIX1 = np.uint64(0xBF58476D1CE4E5B9)
 _MIX2 = np.uint64(0x94D049BB133111EB)
 _STEP = np.uint64(0x9E3779B97F4A7C15)
@@ -86,6 +115,17 @@ def _splitmix(h: np.ndarray) -> np.ndarray:
     h = (h ^ (h >> np.uint64(30))) * _MIX1
     h = (h ^ (h >> np.uint64(27))) * _MIX2
     return h ^ (h >> np.uint64(31))
+
+
+def _mix_shingles(th: np.ndarray, k: int) -> np.ndarray:
+    """Sorted distinct k-gram hashes of a non-empty token-hash array."""
+    kk = min(k, len(th))
+    n = len(th) - kk + 1
+    with np.errstate(over="ignore"):
+        hs = _splitmix(th[:n].copy())
+        for j in range(1, kk):
+            hs = _splitmix(hs * _STEP ^ th[j : n + j])
+    return np.unique(hs)
 
 
 def shingle_hashes(toks: list[str], k: int) -> np.ndarray | None:
@@ -102,17 +142,10 @@ def shingle_hashes(toks: list[str], k: int) -> np.ndarray | None:
     re-proven against the exhaustive-Jaccard oracle."""
     if not toks:
         return None
-    th = np.fromiter((token_hash(t) for t in toks), dtype=np.uint64, count=len(toks))
-    kk = min(k, len(toks))
-    n = len(toks) - kk + 1
-    with np.errstate(over="ignore"):
-        hs = _splitmix(th[:n].copy())
-        for j in range(1, kk):
-            hs = _splitmix(hs * _STEP ^ th[j : n + j])
-    return np.unique(hs)
+    return _mix_shingles(_token_hashes(toks), k)
 
 
-def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
+def perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     rng = np.random.RandomState(cfg.minhash_seed)
     a = rng.randint(0, 1 << 62, size=cfg.num_perms).astype(np.uint64) * np.uint64(2) + np.uint64(1)
     b = rng.randint(0, 1 << 62, size=cfg.num_perms).astype(np.uint64)
@@ -124,67 +157,113 @@ def minhash_py(text: str | None, cfg: DedupConfig) -> list[int] | None:
     hs = shingle_hashes(tokens_py(text), cfg.shingle_k)
     if hs is None:
         return None
-    a, b = _perm_params(cfg)
+    a, b = perm_params(cfg)
     with np.errstate(over="ignore"):
         sig = (hs[:, None] * a[None, :] + b[None, :]).min(axis=0)
     return sig.view(np.int64).tolist()
 
 
-def minhash_signature_udf(cfg: DedupConfig):
-    """Arrow-batched signature kernel: text → struct<minhash array<long>,
-    n_shingles int> in a single pass (shingling is the dominant cost; the
-    lineage counter rides along for free).
+# kernel output fields, in struct order, with their Spark types
+FEATURES = {
+    "minhash": "array<bigint>",
+    "n_shingles": "int",
+    "shingles": "array<bigint>",
+    "simhash": "bigint",
+    "wkeys": "array<bigint>",
+}
+_EMPTY = np.array([], dtype=np.int64)
 
-    The permutation matrix is built once per executor (closure capture,
-    small constant); per-token hashes are memoized worker-globally
-    (token_hash) so the per-doc work is tokenize + k-1 vectorized mixes +
-    the signature min-reduction.
+
+def text_features_udf(fields, *, shingle_k: int | None = None,
+                      window_tokens: int | None = None, simhash_bits: int | None = None,
+                      perms: tuple[np.ndarray, np.ndarray] | None = None):
+    """The Arrow kernel: text → struct of the requested :data:`FEATURES`.
+
+    Per document: ``tokens_py`` once, each token hashed once through the
+    worker-global :func:`token_hash` memo, then only the requested
+    features. Each argument is read only by the fields that need it:
+    ``shingle_k`` by ``minhash``/``n_shingles``/``shingles`` (which share
+    the k-shingle hashes) and ``simhash`` (md5-60 over the distinct
+    shingle strings through ``simhash._SHINGLE60_CACHE``); ``perms``
+    (:func:`perm_params`) by ``minhash``; ``simhash_bits`` by ``simhash``;
+    ``window_tokens`` by ``wkeys``, one numpy sliding-window × powers-of-B
+    dot product over the token hashes (docs shorter than a window emit
+    none). A doc without tokens gets NULL minhash/simhash, 0 shingles and
+    empty arrays.
     """
-    k = cfg.shingle_k
-    a_params, b_params = _perm_params(cfg)
+    from .simhash import simhash_of
 
-    @F.pandas_udf("minhash array<bigint>, n_shingles int")
-    def sig(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    fields = [f for f in FEATURES if f in fields]
+    k, w = shingle_k, window_tokens
+    # field → f(tokens, token hashes, shingle hashes or None)
+    make = {
+        "n_shingles": lambda toks, th, hs: 0 if hs is None else len(hs),
+        "shingles": lambda toks, th, hs: _EMPTY if hs is None else hs.view(np.int64),
+        "simhash": lambda toks, th, hs: simhash_of(_distinct_shingles(toks, k), simhash_bits),
+    }
+    if "minhash" in fields:
+        a, b = perms
+        make["minhash"] = lambda toks, th, hs: (
+            None if hs is None else (hs[:, None] * a + b).min(axis=0).view(np.int64))
+    if "wkeys" in fields:
+        # rolling-hash weights B^(w-1) … B^0, B = the FNV-64 prime
+        powers = np.uint64(1099511628211) ** np.arange(w - 1, -1, -1, dtype=np.uint64)
+        make["wkeys"] = lambda toks, th, hs: _EMPTY if len(toks) < w else np.unique(
+            (np.lib.stride_tricks.sliding_window_view(th, w) * powers)
+            .sum(axis=1, dtype=np.uint64)).view(np.int64)
+    fns = [make[f] for f in fields]
+    need_hs = bool({"minhash", "n_shingles", "shingles"} & set(fields))
+    need_th = need_hs or "wkeys" in fields
+
+    def row(t):
+        toks = tokens_py(t)
+        th = _token_hashes(toks) if need_th else None
+        hs = _mix_shingles(th, k) if need_hs and toks else None
+        return [fn(toks, th, hs) for fn in fns]
+
+    @F.pandas_udf(", ".join(f"{f} {FEATURES[f]}" for f in fields))
+    def features(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for batch in texts:
-            sigs: list = []
-            counts: list = []
-            with np.errstate(over="ignore"):
-                for t in batch:
-                    hs = shingle_hashes(tokens_py(t), k)
-                    if hs is None:
-                        counts.append(0)
-                        sigs.append(None)
-                        continue
-                    counts.append(len(hs))
-                    sig_v = (hs[:, None] * a_params[None, :] + b_params[None, :]).min(axis=0)
-                    sigs.append(sig_v.view(np.int64))
-            yield pd.DataFrame({"minhash": pd.Series(sigs, dtype=object),
-                                "n_shingles": pd.Series(counts, dtype="int32")})
+            with np.errstate(over="ignore"):  # intentional mod-2^64 hashes
+                cols = list(zip(*map(row, batch))) or [()] * len(fields)
+            yield pd.DataFrame({f: pd.Series(c, dtype="int32" if f == "n_shingles" else object)
+                                for f, c in zip(fields, cols)})
 
-    return sig
+    return features
+
+
+def text_features(docs: DataFrame, fields, id_col: str = "doc_id", text_col: str = "text",
+                  **params) -> DataFrame:
+    """(doc, *fields): :func:`text_features_udf` over ``docs``, flattened;
+    ``params`` are the kernel's keyword arguments."""
+    kernel = text_features_udf(fields, **params)
+    return docs.select(F.col(id_col).alias("doc"), kernel(F.col(text_col)).alias("_f")).select(
+        "doc", "_f.*")
+
+
+def spread(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(doc, text), repartitioned by doc when under-parallel.
+
+    The Arrow kernel parallelizes per partition, and parquet inputs often
+    arrive as one or two files — so an under-parallel projection is
+    repartitioned to the session's default parallelism before the kernel.
+    Only (id, text) are shuffled — column pruning keeps document metadata
+    out of the exchange. r6 (guide §2.4): only shuffle when the input is
+    UNDER-parallel — a 100 TB scan already arrives in thousands of splits;
+    features are per-row deterministic, so partitioning never affects
+    values.
+    """
+    narrow = docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("text"))
+    n = docs.sparkSession.sparkContext.defaultParallelism
+    if narrow.rdd.getNumPartitions() < n:
+        narrow = narrow.repartition(n, "doc")
+    return narrow
 
 
 def with_minhash(docs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
-    """(id, minhash array<long>, n_shingles int) signature table.
-
-    The Arrow kernel parallelizes per-partition, and parquet inputs often
-    arrive as one or two files — so an under-parallel projection is
-    repartitioned to the session's default parallelism before the UDF.
-    Only (id, text) are shuffled — column pruning keeps document metadata
-    out of the exchange. n_shingles (lineage counter, FIXTURES.md §3)
-    rides along from the same kernel pass.
-    """
-    narrow = docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_text"))
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    # r6 (guide §2.4): only shuffle when the input is UNDER-parallel
-    # (e.g. a single local parquet file). A 100 TB scan already arrives
-    # in thousands of splits — the unconditional repartition was a full
-    # (id, text) exchange for nothing; signatures are per-row
-    # deterministic, so partitioning never affects values.
-    if narrow.rdd.getNumPartitions() < n:
-        narrow = narrow.repartition(n, "doc")
-    sig = minhash_signature_udf(cfg)
-    return narrow.select("doc", sig(F.col("_text")).alias("_s")).select(
-        "doc", F.col("_s.minhash").alias("minhash"), F.col("_s.n_shingles").alias("n_shingles")
-    )
+    """(doc, minhash array<long>, n_shingles int) signature table; the
+    kernel runs over :func:`spread` input. n_shingles (lineage counter,
+    FIXTURES.md §3) rides along from the same kernel pass."""
+    return text_features(spread(docs, id_col, text_col), ("minhash", "n_shingles"), "doc",
+                         shingle_k=cfg.shingle_k, perms=perm_params(cfg))

@@ -15,22 +15,30 @@ reproducible in any engine (the DuckDB oracle computes the identical
 signature in SQL; tests/test_entry.py proves bit-equality). Signature bit
 b is set iff the (+1/−1) vote sum over distinct tokens is strictly
 positive — ties → 0, matching the SQL mirror.
+
+The signature is one field of the shared Arrow text kernel
+(minhash.py::text_features_udf); :func:`simhash_of` is its per-document
+vote. Measured decision (PLANS.md §SimHash kernel): a whole-batch variant
+— flat shingle array + S×60 bit matrix + ``np.add.reduceat`` segment sums
+— was built and A/B'd at 40k pages / 16 threads: per-doc numpy is STABLE
+at 2-4 s while the batch-matrix kernel oscillated 3-22 s (multi-10-MB
+allocation churn in reused python workers). The md5 loop dominates either
+way; the per-doc bit matrix (~150×60) stays in cache. ``hamming_pairs``
+is a checkpoint, then the :func:`hamming_join` half; the pipeline runs
+the join half directly over its persisted kernel frame.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 from itertools import combinations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import DedupConfig
-from ..functions.normalize import tokens_py
+from .minhash import shingles_py, text_features
 
 
 def token_hash_py(token: str, bits: int = 60) -> int:
@@ -70,6 +78,21 @@ def _token_hash60(token: str) -> int:
     return v
 
 
+def simhash_of(shingles: list[str], bits: int = 60) -> int | None:
+    """SimHash of a distinct-shingle list; None when it is empty."""
+    if not shingles:
+        return None
+    if bits == 60:  # the engine path: memoized digest-based hashes
+        h = np.fromiter((_token_hash60(t) for t in shingles), dtype=np.uint64,
+                        count=len(shingles))
+    else:
+        h = np.array([token_hash_py(t, bits) for t in shingles], dtype=np.uint64)
+    bit_matrix = (h[:, None] >> np.arange(bits, dtype=np.uint64)[None, :]) & np.uint64(1)
+    votes = 2 * bit_matrix.sum(axis=0).astype(np.int64) - len(shingles)
+    # pack sign bits without a Python bit loop (sum of distinct powers < 2^60)
+    return int((np.uint64(1) << np.arange(bits, dtype=np.uint64))[votes > 0].sum())
+
+
 def simhash_py(text: str | None, bits: int = 60, k: int = 3) -> int | None:
     """SimHash over distinct k-token shingles (NOT unigrams): with a small
     shared vocabulary, every document's unigram set converges and unigram
@@ -77,50 +100,13 @@ def simhash_py(text: str | None, bits: int = 60, k: int = 3) -> int | None:
     docs — measured on the synthetic corpus: half the corpus fused into one
     cluster. Shingles keep the feature sets document-specific (same reason
     the MinHash engine shingles)."""
-    from .minhash import shingles_py
-
-    toks = shingles_py(text, k)
-    if not toks:
-        return None
-    if bits == 60:  # the engine path: memoized digest-based hashes
-        h = np.fromiter((_token_hash60(t) for t in toks), dtype=np.uint64,
-                        count=len(toks))
-    else:
-        h = np.array([token_hash_py(t, bits) for t in toks], dtype=np.uint64)
-    bit_matrix = (h[:, None] >> np.arange(bits, dtype=np.uint64)[None, :]) & np.uint64(1)
-    votes = 2 * bit_matrix.sum(axis=0).astype(np.int64) - len(toks)
-    # pack sign bits without a Python bit loop (sum of distinct powers < 2^60)
-    return int((np.uint64(1) << np.arange(bits, dtype=np.uint64))[votes > 0].sum())
-
-
-def simhash_udf(cfg: DedupConfig):
-    """Arrow-batched simhash kernel, per-document numpy vote reduction.
-
-    Measured decision (PLANS.md §SimHash kernel): a whole-batch variant —
-    flat shingle array + S×60 bit matrix + ``np.add.reduceat`` segment
-    sums — was built and A/B'd at 40k pages / 16 threads: per-doc numpy is
-    STABLE at 2-4 s while the batch-matrix kernel oscillated 3-22 s
-    (multi-10-MB allocation churn in reused python workers). The md5 loop
-    dominates either way; the per-doc bit matrix (~150×60) stays in cache.
-    Bit-exactness vs the DuckDB mirror is asserted by the simhash_values
-    oracle either way.
-    """
-    bits = cfg.simhash_bits
-    k = cfg.shingle_k
-
-    @F.pandas_udf(T.LongType())
-    def sh(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for batch in texts:
-            yield pd.Series([simhash_py(t, bits, k) for t in batch], dtype=object)
-
-    return sh
+    return simhash_of(shingles_py(text, k), bits)
 
 
 def with_simhash(docs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
-    return docs.select(
-        F.col(id_col).alias("doc"), simhash_udf(cfg)(F.col(text_col)).alias("simhash")
-    )
+    return text_features(docs, ("simhash",), id_col, text_col, shingle_k=cfg.shingle_k,
+                         simhash_bits=cfg.simhash_bits)
 
 
 def _blocking_keys(cfg: DedupConfig) -> list:
@@ -149,17 +135,26 @@ def _blocking_keys(cfg: DedupConfig) -> list:
 
 
 def hamming_pairs(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """All pairs (src < dst) with Hamming(simhash) <= hamming_max.
+    """All pairs (src < dst) with Hamming(simhash) <= hamming_max:
+    :func:`hamming_join` over ``sigs`` materialized once.
+
+    The self-join expands the signature plan once per side; a live
+    with_simhash plan would pay the md5-shingle loop TWICE per doc, so the
+    (doc, simhash) table is checkpointed first. Measured:
+    simhash_hamming_pairs 3.85 → 2.6 s at sf0.1. The pipeline calls
+    :func:`hamming_join` directly on its persisted kernel frame.
+    """
+    return hamming_join(sigs.localCheckpoint(), cfg)
+
+
+def hamming_join(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """The blocking self-join over a (doc, simhash) frame, which is read
+    once per side (pass a materialized one).
 
     Exact multi-block blocking join (:func:`_blocking_keys`), then JVM-side
     popcount verification: ``bit_count(s1 ^ s2)`` — whole-stage codegen,
     no Python.
     """
-    # the self-join below expands the signature plan once per side; every
-    # caller passes a live with_simhash plan, so materialize the (doc,
-    # simhash) table once instead of paying the md5-shingle loop TWICE per
-    # doc. Measured: simhash_hamming_pairs 3.85 → 2.6 s at sf0.1.
-    sigs = sigs.localCheckpoint()
     keyed = (
         sigs.filter(F.col("simhash").isNotNull())
         .select("doc", "simhash",

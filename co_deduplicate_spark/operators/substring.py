@@ -15,19 +15,18 @@ with an *anchor-shingle* blocking join + exact verification:
 
 This finds *full-document* containment (the planted fixture case —
 FIXTURES.md §1 "page embeds another page's full text"). Partial-overlap
-substring mining (any shared window ≥ L) is the per-partition suffix-array
-variant in ``suffix_window_pairs`` below.
+substring mining (any shared window ≥ L) is ``suffix_window_pairs`` below:
+the shared text kernel's window keys (minhash.py::text_features_udf), then
+the :func:`window_pairs` join half, which the pipeline's window engine runs
+directly over its persisted kernel frame.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from .minhash import text_features
 
 
 def containment_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -97,73 +96,45 @@ def containment_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     )
 
 
-def window_keys_udf(window_tokens: int):
-    """Arrow kernel: text → distinct 64-bit rolling-hash keys of every
-    w-token window. Per doc: hash each token once (blake2b-8, the MinHash
-    base hash), then one numpy sliding-window × powers-of-B dot product —
-    O(n·w) uint64 multiplies, no per-window string building. (The previous
-    Catalyst-HOF form concat'd ~w tokens per offset interpreted; measured
-    18.7 s → 3 s on the sf0.1 battery.)"""
-    from ..functions.normalize import tokens_py
-    from .minhash import token_hash
-
-    B = np.uint64(1099511628211)  # FNV-64 prime as polynomial base
-    powers = np.empty(window_tokens, dtype=np.uint64)
-    powers[-1] = np.uint64(1)
-    with np.errstate(over="ignore"):  # wraparound mod 2^64 is the hash design
-        for i in range(window_tokens - 2, -1, -1):
-            powers[i] = powers[i + 1] * B
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def wk(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for batch in texts:
-            out = []
-            for t in batch:
-                toks = tokens_py(t)
-                if len(toks) < window_tokens:
-                    out.append([])
-                    continue
-                th = np.fromiter(
-                    (token_hash(tok) for tok in toks), dtype=np.uint64, count=len(toks)
-                )
-                sw = np.lib.stride_tricks.sliding_window_view(th, window_tokens)
-                with np.errstate(over="ignore"):  # intentional mod-2^64 hash
-                    keys = (sw * powers[None, :]).sum(axis=1, dtype=np.uint64)
-                out.append(np.unique(keys).view(np.int64).tolist())
-            yield pd.Series(out, dtype=object)
-
-    return wk
-
-
 def suffix_window_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                         window_tokens: int = 30, max_df: int | None = None) -> DataFrame:
     """Pairs sharing any exact window of ``window_tokens`` normalized tokens
     — the general duplicated-passage detector (the suffix-array use case).
 
-    Blocking key = rolling polynomial hash of each w-token window (Arrow
-    kernel above); pairs agreeing on any window key are emitted with the
-    count of shared distinct windows (equal to the string-window count
-    barring ~2⁻⁶⁴ hash collisions — the oracle joins on window strings).
-
-    ``max_df=None`` (default) is exhaustive. ``max_df=N`` is the hot-window
-    cost control for boilerplate at scale: a window shared by k docs emits
-    C(k,2) join rows, so a site-wide footer on 10⁶ pages is 5·10¹¹ pairs —
-    AQE splits partitions but cannot shrink that quadratic candidate set.
-    With the cap, window keys whose document frequency exceeds N are
-    dropped from the join entirely. Trade-off, stated plainly: a pair whose ONLY
-    shared windows are ubiquitous boilerplate is missed, and surviving
-    pairs' ``shared_windows`` counts exclude dropped windows. The dropped
-    key count is logged — never silent.
+    Blocking key = rolling polynomial hash of each w-token window (the
+    ``wkeys`` field of minhash.py::text_features_udf: each token hashed
+    once, then one numpy sliding-window × powers-of-B dot product — no
+    per-window string building); pairs agreeing on any window key are
+    emitted with the count of shared distinct windows (equal to the
+    string-window count barring ~2⁻⁶⁴ hash collisions — the oracle joins
+    on window strings). ``max_df``: see :func:`window_pairs`.
     """
-    wk = window_keys_udf(window_tokens)
-    windows = (
-        docs.select(F.col(id_col).alias("doc"), wk(F.col(text_col)).alias("_wkeys"))
-        .select("doc", F.explode("_wkeys").alias("wkey"))
-    )
-    # the self-join below expands this plan per side (plus the df
-    # aggregate under max_df): materialize the Arrow kernel once instead of
+    windows = text_features(docs, ("wkeys",), id_col, text_col,
+                            window_tokens=window_tokens).select(
+        "doc", F.explode("wkeys").alias("wkey"))
+    # the self-join expands this plan per side (plus the df aggregate
+    # under max_df): materialize the Arrow kernel once instead of
     # re-running it per consumer
-    windows = windows.localCheckpoint()
+    return window_pairs(windows.localCheckpoint(), max_df)[0]
+
+
+def window_pairs(windows: DataFrame, max_df: int | None) -> tuple[DataFrame, int]:
+    """The window self-join over a (doc, wkey) frame: (src < dst,
+    shared_windows) pairs, and the number of hot keys the cap dropped.
+
+    ``max_df=None`` is exhaustive (0 dropped). ``max_df=N`` is the
+    hot-window cost control for boilerplate at scale: a window shared by k
+    docs emits C(k,2) join rows, so a site-wide footer on 10⁶ pages is
+    5·10¹¹ pairs — AQE splits partitions but cannot shrink that quadratic
+    candidate set. With the cap, window keys whose document frequency
+    exceeds N are dropped from the join entirely. Trade-off, stated
+    plainly: a pair whose ONLY shared windows are ubiquitous boilerplate is
+    missed, and surviving pairs' ``shared_windows`` counts exclude dropped
+    windows. The dropped key count is logged and returned — never silent.
+    ``windows`` is read once per join side (and once more under the cap):
+    pass a materialized frame.
+    """
+    n_dropped = 0
     if max_df is not None:
         import logging
 
@@ -176,16 +147,18 @@ def suffix_window_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str =
             .select("wkey")
             .localCheckpoint()
         )
+        n_dropped = hot.count()
         logging.getLogger(__name__).info(
             "suffix_window_pairs max_df=%d: dropping %d hot window keys "
-            "from candidate generation", max_df, hot.count(),
+            "from candidate generation", max_df, n_dropped,
         )
         windows = windows.join(hot, "wkey", "left_anti")
     a = windows.alias("a")
     b = windows.alias("b")
-    return (
+    pairs = (
         a.join(b, "wkey")
         .filter(F.col("a.doc") < F.col("b.doc"))
         .groupBy(F.col("a.doc").alias("src"), F.col("b.doc").alias("dst"))
         .agg(F.count(F.lit(1)).alias("shared_windows"))
     )
+    return pairs, n_dropped

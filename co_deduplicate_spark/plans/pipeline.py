@@ -6,6 +6,8 @@ the reference's per-record update + version-conflict retry loop
 (/root/reference/src/documentsManager.js:220-356):
 
   pages ─ extract ─→ corpus(url, text, lang, source, session)
+        ─ one text kernel ─→ features(url, minhash[128], n_shingles
+                                     + the engines' shingles, simhash, wkeys)
         ─ signatures ─→ (url, minhash[128], n_shingles)
         ─ banding + self-join ─→ candidate_edges(src, dst, rules)
         ─ exact-Jaccard verify ─→ verified edges (+ per-pair provenance,
@@ -27,6 +29,18 @@ write — with the aggregates attached through ``DataFrame.observe``, so
 the write job itself computes them and no stage runs a counting job —
 the manifest counters, and the lineage record, always the stage's last
 call. The candidate stage's engines are one table too, :data:`ENGINES`.
+The text kernel (operators/minhash.py::text_features_udf) tokenizes each
+document once for every engine: :func:`corpus_features` runs it for the
+signatures' ``minhash`` + ``n_shingles`` plus the field of each selected
+engine that reads one (:data:`ENGINE_FEATURES`: MinHash-verify
+``shingles``, SimHash ``simhash``, window ``wkeys``), and the signatures
+stage writes its MinHash columns. When such an engine runs, the frame is
+persisted and the engine reads its field from the cache through the
+operators' join halves (``verify_pairs``, ``hamming_join``,
+``window_pairs``) instead of re-running a kernel over the corpus; it is
+unpersisted once candidate_edges is written, and on resume recomputed
+from the stored corpus. A run with none of those engines (rules,
+substring, ann) computes only the signature fields and persists nothing.
 The clusters and enriched stages share one cluster aggregate
 (plans/business_view.py::cluster_table): the enriched stage reads chain,
 members, sources and size from the stored clusters table instead of
@@ -38,13 +52,27 @@ sorted distinct member sources (documentsManager.js:288), is_duplicate ≡
 ``business.isDuplicate`` (painless/updateDuplicatesGraph.painless:216-218).
 
 Scale strategy (100 TB / 10^12 docs):
-  * signatures: narrow projection (url, text) into the Arrow UDF; the
-    table written back is url + 128 longs — ~1 KB/doc, no document bodies
-    move after this stage.
+  * text kernel: narrow projection (url, text), repartitioned when
+    under-parallel, into the one Arrow UDF — one tokenization per
+    document. Its frame is persisted (memory and disk, recomputable from
+    the stored corpus, unlike a localCheckpoint) only until
+    candidate_edges is written, and holds only the selected engines'
+    fields. Stored arrays instead of re-tokenizing per engine (what the
+    standalone operators do, each checkpointing its own keys): the
+    ``shingles`` and ``wkeys`` arrays are ~8 bytes per token for EVERY
+    document, where standalone verification shingles candidate docs only.
+    With the window engine the cache is the smaller — on the 2,000-page
+    benchmark corpus with the four engines of its batch_dedup run, 6.6 MB
+    against 30.4 MB of standalone checkpoints (the exploded window keys
+    alone are 29.7 MB). With MinHash alone it is the larger: 4.6 MB
+    (signatures plus every doc's shingles) against the 0.43 MB standalone
+    verification checkpoints for candidate docs.
+    The signatures table written back is url + 128 longs — ~1 KB/doc, no
+    document bodies move after this stage.
   * band join: shuffle keys are (band_id, band_hash) 16-byte pairs; AQE
     skew-join plus optional star reduction for mega-buckets (lsh.py).
-  * verification joins only candidate pairs to shingle postings — never a
-    cross product.
+  * verification joins only candidate pairs to the cached shingle sets —
+    never a cross product.
   * CC: O(log n) star rounds, each a localCheckpoint to cut lineage.
 """
 
@@ -61,9 +89,9 @@ from pyspark.sql import functions as F
 from ..config import DedupConfig
 from ..functions.extract import extracted_text
 from ..operators.connected_components import attach_singletons, connected_components
-from ..operators.jaccard import verify_candidates
+from ..operators.jaccard import verify_pairs
 from ..operators.lsh import band_table, candidate_pairs, hot_buckets
-from ..operators.minhash import with_minhash
+from ..operators.minhash import perm_params, spread, text_features
 from ..sources.catalog import StageCatalog
 from .business_view import cluster_table, record_view
 
@@ -120,9 +148,24 @@ def corpus_stage(pages: DataFrame, cfg: DedupConfig) -> StageOutput:
     }
 
 
-def signatures_stage(corpus: DataFrame, cfg: DedupConfig) -> StageOutput:
+# candidate engine → the text-kernel field it reads from the features frame
+ENGINE_FEATURES = {"minhash": "shingles", "simhash": "simhash", "window": "wkeys"}
+
+
+def corpus_features(corpus: DataFrame, cfg: DedupConfig, engines: tuple[str, ...]) -> DataFrame:
+    """The signatures' ``minhash`` + ``n_shingles`` and each selected
+    engine's field (:data:`ENGINE_FEATURES`) for every corpus document,
+    from one kernel pass (operators/minhash.py::text_features_udf), keyed
+    by ``doc`` = url."""
+    fields = ("minhash", "n_shingles", *(f for e, f in ENGINE_FEATURES.items() if e in engines))
+    return text_features(spread(corpus, "url", "text"), fields, "doc",
+                         shingle_k=cfg.shingle_k, window_tokens=cfg.window_tokens,
+                         simhash_bits=cfg.simhash_bits, perms=perm_params(cfg))
+
+
+def signatures_stage(features: DataFrame, cfg: DedupConfig) -> StageOutput:
     """MinHash signatures; NULL for non-deduplicable (token-less) docs."""
-    sigs = with_minhash(corpus, cfg, id_col="url", text_col="text")
+    sigs = features.select("doc", "minhash", "n_shingles")
     return sigs, {}, {"non_deduplicable": F.sum(F.col("minhash").isNull().cast("long"))}
 
 
@@ -131,6 +174,7 @@ class EngineInputs(NamedTuple):
 
     corpus: DataFrame
     signatures: DataFrame
+    features: DataFrame  # corpus_features, persisted for the engines that read it
     embeddings: DataFrame | None
     rule_spec: object
     star_threshold: int | None  # None: exact LSH cliques for every bucket
@@ -195,11 +239,10 @@ def _minhash_engine(x: EngineInputs, cfg: DedupConfig, counters: dict) -> DataFr
             }
         )
         cands = candidate_pairs(bands, cfg, star_reduce_threshold=None)
-    verified = verify_candidates(
-        cands, x.corpus, id_col="url", text_col="text",
-        threshold=cfg.jaccard_threshold, shingle_k=cfg.shingle_k,
-        candidates_distinct=True,  # candidate_pairs ends in distinct()
-    )
+    # candidate_pairs ends in distinct(); the shingle sets are cached
+    shingles = x.features.select("doc", F.col("shingles").alias("tokens"),
+                                 F.col("n_shingles").alias("n_tokens"))
+    verified = verify_pairs(cands, shingles, cfg.jaccard_threshold)
     return verified.select(
         "src", "dst",
         F.col("jaccard").alias("score"),
@@ -208,9 +251,9 @@ def _minhash_engine(x: EngineInputs, cfg: DedupConfig, counters: dict) -> DataFr
 
 
 def _simhash_engine(x: EngineInputs, cfg: DedupConfig, counters: dict) -> DataFrame:
-    from ..operators.simhash import hamming_pairs, with_simhash
+    from ..operators.simhash import hamming_join
 
-    hp = hamming_pairs(with_simhash(x.corpus, cfg, id_col="url", text_col="text"), cfg)
+    hp = hamming_join(x.features.select("doc", "simhash"), cfg)
     return hp.select(
         "src", "dst",
         (1 - F.col("hamming") / F.lit(cfg.simhash_bits)).alias("score"),
@@ -234,17 +277,16 @@ def _substring_engine(x: EngineInputs, cfg: DedupConfig, counters: dict) -> Data
 
 
 def _window_engine(x: EngineInputs, cfg: DedupConfig, counters: dict) -> DataFrame:
-    from ..operators.substring import suffix_window_pairs
+    from ..operators.substring import window_pairs
 
     # duplicated-passage evidence: shared exact w-token window.
-    # cfg.window_max_df caps boilerplate inside the pipeline (the operator
-    # logs the dropped-key count; it also rides lineage here) — the graded
-    # standalone query stays uncapped.
-    wp = suffix_window_pairs(
-        x.corpus, id_col="url", text_col="text",
-        window_tokens=cfg.window_tokens, max_df=cfg.window_max_df,
-    )
+    # cfg.window_max_df caps boilerplate inside the pipeline, and the count
+    # of hot keys the cap dropped goes into lineage — the graded standalone
+    # query stays uncapped.
+    windows = x.features.select("doc", F.explode("wkeys").alias("wkey"))
+    wp, n_dropped = window_pairs(windows, cfg.window_max_df)
     counters["window_max_df"] = cfg.window_max_df
+    counters["window_hot_keys_dropped"] = n_dropped
     return wp.select(
         "src", "dst", F.lit(1.0).alias("score"),
         F.lit(f"window:w{cfg.window_tokens}df{cfg.window_max_df}").alias("rule"),
@@ -444,16 +486,31 @@ def run_pipeline(
         config_hash += f"-rules{rule_spec.config_key()}"
     cat = StageCatalog(spark, workdir, config_hash)
     out: dict[str, DataFrame] = {}
+    # the corpus_features frame, built on first use (from the stored corpus
+    # on resume); persisted only when an engine reads it after the
+    # signatures stage, and released once candidate_edges is written
+    held: list[DataFrame] = []
+    shared = not ENGINE_FEATURES.keys().isdisjoint(engines)
+
+    def features() -> DataFrame:
+        if not held:
+            f = corpus_features(out["corpus"], cfg, engines)
+            held.append(f.persist() if shared else f)
+        return held[0]
+
+    def release() -> None:
+        while held:
+            held.pop().unpersist()
 
     def engine_inputs() -> EngineInputs:
         m = cat.manifest("signatures")
-        return EngineInputs(out["corpus"], out["signatures"], embeddings, rule_spec,
-                            star_threshold,
+        return EngineInputs(out["corpus"], out["signatures"], features(), embeddings,
+                            rule_spec, star_threshold,
                             m["rows"] - int(m["counters"].get("non_deduplicable", 0)))
 
     stages = [
         ("corpus", lambda: corpus_stage(pages, cfg)),
-        ("signatures", lambda: signatures_stage(out["corpus"], cfg)),
+        ("signatures", lambda: signatures_stage(features(), cfg)),
         ("candidate_edges", lambda: candidate_edges_stage(engine_inputs(), cfg, engines)),
         ("cluster_labels", lambda: cluster_labels_stage(
             out["candidate_edges"], out["corpus"], cfg)),
@@ -468,29 +525,34 @@ def run_pipeline(
             out["clusters"], out["corpus"], out["cluster_labels"],
             out["candidate_edges"], out["signatures"], cfg)))
 
-    for name, build in stages:
-        # the enriched stage lives in the UpsertTable, every other in the catalog
-        upsert = table if name == "enriched" else None
-        t0 = time.monotonic()
-        if resume and cat.is_complete(name) and (upsert is None or upsert.exists()):
-            out[name] = cat.read(name) if upsert is None else upsert.read()
-            continue
-        df, counters, aggs = build()
-        obs = None
-        if aggs:  # computed by the write job below, no counting job
-            obs = Observation(f"lineage.{name}")
-            df = df.observe(obs, *(c.alias(k) for k, c in aggs.items()))
-        if upsert is None:
-            out[name] = cat.write(name, df, counters=lambda: {
-                k: v for k, v in _observed(obs).items() if k in _MANIFEST_COUNTERS})
-        else:
-            out[name] = upsert.upsert(df)
-            m = upsert._manifest()
-            cat.mark_complete(name, rows=m["rows"], counters={"upsert_version": m["version"]})
-        cat.log_lineage(name, {"rows_out": cat.manifest(name)["rows"],
-                               **_observed(obs), **counters,
-                               "wall_s": round(time.monotonic() - t0, 2),
-                               **cat.partition_summary(name)})
+    try:
+        for name, build in stages:
+            # the enriched stage lives in the UpsertTable, every other in the catalog
+            upsert = table if name == "enriched" else None
+            t0 = time.monotonic()
+            if resume and cat.is_complete(name) and (upsert is None or upsert.exists()):
+                out[name] = cat.read(name) if upsert is None else upsert.read()
+                continue
+            df, counters, aggs = build()
+            obs = None
+            if aggs:  # computed by the write job below, no counting job
+                obs = Observation(f"lineage.{name}")
+                df = df.observe(obs, *(c.alias(k) for k, c in aggs.items()))
+            if upsert is None:
+                out[name] = cat.write(name, df, counters=lambda: {
+                    k: v for k, v in _observed(obs).items() if k in _MANIFEST_COUNTERS})
+            else:
+                out[name] = upsert.upsert(df)
+                m = upsert._manifest()
+                cat.mark_complete(name, rows=m["rows"], counters={"upsert_version": m["version"]})
+            cat.log_lineage(name, {"rows_out": cat.manifest(name)["rows"],
+                                   **_observed(obs), **counters,
+                                   "wall_s": round(time.monotonic() - t0, 2),
+                                   **cat.partition_summary(name)})
+            if name == "candidate_edges":
+                release()
+    finally:
+        release()
     return out
 
 

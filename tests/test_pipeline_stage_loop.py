@@ -11,13 +11,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from co_deduplicate_spark.config import DedupConfig
+from co_deduplicate_spark.operators.minhash import text_features
 from co_deduplicate_spark.plans.pipeline import run_pipeline
 from co_deduplicate_spark.sources.pages import synth_pages
 
 N_DOCS = 300  # the small page fixture of test_pages_pipeline.py
 # max_doc_chars below the fixture's longest pages, so some records are
-# flagged and the observed flag counter is not trivially zero
-CFG = DedupConfig(max_doc_chars=1200)
+# flagged and the observed flag counter is not trivially zero; likewise a
+# window cap low enough that the window engine drops some hot keys
+CFG = DedupConfig(max_doc_chars=1200, window_max_df=2)
+ENGINES = ("minhash", "window")
 STAGES = ["corpus", "signatures", "candidate_edges", "cluster_labels", "clusters", "enriched"]
 PARTITIONS = ["n_partitions", "rows_max", "skew_max_over_mean"]
 LINEAGE_FIELDS = {
@@ -25,7 +28,8 @@ LINEAGE_FIELDS = {
     "signatures": ["non_deduplicable", *PARTITIONS],
     "candidate_edges": ["engines", "lsh_hot_buckets", "lsh_max_hot_bucket",
                         "lsh_hot_clique_pairs_avoided", "lsh_star_threshold",
-                        "lsh_band_rows", *PARTITIONS],
+                        "lsh_band_rows", "window_max_df", "window_hot_keys_dropped",
+                        *PARTITIONS],
     "cluster_labels": PARTITIONS,
     "clusters": ["duplicate_clusters", "capped_clusters", "max_cluster_size",
                  "chain_max_members", *PARTITIONS],
@@ -48,7 +52,7 @@ def _manifest(wk, stage) -> dict:
 
 def test_stage_loop_lineage_and_observed_counters(spark, pages, tmp_path):
     wk = tmp_path / "wk"
-    out = run_pipeline(spark, pages, str(wk), CFG, enriched=True)
+    out = run_pipeline(spark, pages, str(wk), CFG, engines=ENGINES, enriched=True)
     recs = _lineage(wk)
     assert [r["stage"] for r in recs] == STAGES
     for r in recs:
@@ -65,6 +69,11 @@ def test_stage_loop_lineage_and_observed_counters(spark, pages, tmp_path):
     assert by["signatures"]["non_deduplicable"] == n_null
     assert _manifest(wk, "signatures")["counters"] == {"non_deduplicable": n_null}
     assert by["candidate_edges"]["lsh_band_rows"] == (sigs.count() - n_null) * CFG.lsh_bands
+    wkeys = text_features(corpus, ("wkeys",), "url", window_tokens=CFG.window_tokens).select(
+        F.explode("wkeys").alias("wkey"))
+    n_hot = wkeys.groupBy("wkey").count().filter(F.col("count") > CFG.window_max_df).count()
+    assert n_hot > 0
+    assert by["candidate_edges"]["window_hot_keys_dropped"] == n_hot
     assert by["clusters"]["duplicate_clusters"] == clusters.filter("is_duplicate").count()
     assert by["clusters"]["capped_clusters"] == clusters.filter("truncated").count()
     assert by["clusters"]["max_cluster_size"] == clusters.agg(F.max("size")).first()[0]
@@ -74,7 +83,7 @@ def test_stage_loop_lineage_and_observed_counters(spark, pages, tmp_path):
         assert by[stage]["rows_out"] == out[stage].count() == _manifest(wk, stage)["rows"]
 
     # resume: every stage is complete, so the loop appends no lineage record
-    run_pipeline(spark, pages, str(wk), CFG, enriched=True)
+    run_pipeline(spark, pages, str(wk), CFG, engines=ENGINES, enriched=True)
     assert len(_lineage(wk)) == len(STAGES)
 
 

@@ -23,10 +23,6 @@ from co_deduplicate_spark.functions.normalize import (
 )
 from co_deduplicate_spark.functions.text_stats import STOPWORDS
 from co_deduplicate_spark.operators.ann import cosine_topk
-from co_deduplicate_spark.operators.connected_components import (
-    attach_singletons,
-    connected_components,
-)
 from co_deduplicate_spark.operators.exact import exact_dup_clusters
 from co_deduplicate_spark.operators.jaccard import jaccard_pairs, verify_candidates
 from co_deduplicate_spark.operators.lsh import band_table, candidate_pairs
@@ -693,10 +689,7 @@ def q_incremental_session_merge(spark, sf_dir):
         .unionByName(planted)
         .withColumn("session", F.lit("s0"))
     ).localCheckpoint()
-    old_labels = attach_singletons(
-        connected_components(old_edges.select("src", "dst"), cfg=CFG),
-        old.select(F.col("url").alias("node")), "node",
-    ).localCheckpoint()
+    old_labels = cluster_labels_stage(old_edges, old, CFG)[0].localCheckpoint()
     old_sigs = with_minhash(old, CFG, id_col="url", text_col="text").localCheckpoint()
     out = incremental_update(old, old_edges, old_labels, new, CFG,
                              current_session="s1", old_signatures=old_sigs)

@@ -27,8 +27,14 @@ are Column expressions. No stage function touches the catalog.
 loop that owns, for every stage: the resume check, the stage timer, the
 write — with the aggregates attached through ``DataFrame.observe``, so
 the write job itself computes them and no stage runs a counting job —
-the manifest counters, and the lineage record, always the stage's last
-call. The candidate stage's engines are one table too, :data:`ENGINES`.
+the manifest counters (every observed aggregate), and the lineage
+record, always the stage's last call. Every stage, the enriched one
+included, is one StageCatalog table under ``<workdir>/<stage>``,
+rewritten whole on a non-resumed run: the batch recomputes every record,
+so nothing is merged into an earlier run's rows. Keyed MERGE
+(sources/upsert.py) is for state where only touched records change, the
+incremental session tables (streaming/incremental.py). The candidate
+stage's engines are one table too, :data:`ENGINES`.
 The text kernel (operators/minhash.py::text_features_udf) tokenizes each
 document once for every engine: :func:`corpus_features` runs it for the
 signatures' ``minhash`` + ``n_shingles`` plus the field of each selected
@@ -80,7 +86,6 @@ from __future__ import annotations
 
 import functools
 import time
-from pathlib import Path
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -97,10 +102,6 @@ from .business_view import cluster_table, record_view
 
 # (frame to store, counters computed eagerly, lineage aggregates)
 StageOutput = tuple[DataFrame, dict, dict[str, Column]]
-
-# observed counters that also go into the stage MANIFEST: a later stage
-# reads them back on resume without re-scanning (signatures → lsh_band_rows)
-_MANIFEST_COUNTERS = ("non_deduplicable",)
 
 
 def _source_expr(url):
@@ -394,10 +395,9 @@ def enriched_stage(clusters: DataFrame, corpus: DataFrame, labels: DataFrame,
     stamps (painless/updateDuplicatesGraph.painless:160-232 +
     setCreationAndModificationDate.painless). It reads chain, members,
     sources, size and the cap from the stored clusters table, so the
-    labels are not aggregated a second time. :func:`run_pipeline` stores
-    it through the keyed UpsertTable (MERGE semantics, atomic snapshot
-    flip) so a reader sees exactly what an ES reader of the reference
-    would."""
+    labels are not aggregated a second time. Every record is recomputed on
+    every run, so :func:`run_pipeline` writes the whole table as a stage
+    table; a url that left the corpus leaves the table with it."""
     from ..sources.upsert import ingest_defaults
 
     view = record_view(
@@ -454,8 +454,9 @@ def run_pipeline(
     quadratic in the hottest bucket, only safe on curated corpora).
     Bucket-size stats are logged to lineage on every non-resumed run.
 
-    ``enriched``: also run the enriched stage, stored as the keyed
-    UpsertTable ``<workdir>/documents_enriched``.
+    ``enriched``: also run the enriched stage, stored like every other
+    stage as ``<workdir>/enriched`` and rewritten whole on each
+    non-resumed run.
 
     Returns the stage tables: corpus, signatures, candidate_edges,
     cluster_labels, clusters (and enriched).
@@ -516,35 +517,26 @@ def run_pipeline(
             out["candidate_edges"], out["corpus"], cfg)),
         ("clusters", lambda: clusters_stage(out["cluster_labels"], out["corpus"], cfg)),
     ]
-    table = None
     if enriched:
-        from ..sources.upsert import UpsertTable
-
-        table = UpsertTable(spark, str(Path(workdir) / "documents_enriched"), key="url")
         stages.append(("enriched", lambda: enriched_stage(
             out["clusters"], out["corpus"], out["cluster_labels"],
             out["candidate_edges"], out["signatures"], cfg)))
 
     try:
         for name, build in stages:
-            # the enriched stage lives in the UpsertTable, every other in the catalog
-            upsert = table if name == "enriched" else None
             t0 = time.monotonic()
-            if resume and cat.is_complete(name) and (upsert is None or upsert.exists()):
-                out[name] = cat.read(name) if upsert is None else upsert.read()
+            if resume and cat.is_complete(name):
+                out[name] = cat.read(name)
                 continue
             df, counters, aggs = build()
             obs = None
             if aggs:  # computed by the write job below, no counting job
                 obs = Observation(f"lineage.{name}")
                 df = df.observe(obs, *(c.alias(k) for k, c in aggs.items()))
-            if upsert is None:
-                out[name] = cat.write(name, df, counters=lambda: {
-                    k: v for k, v in _observed(obs).items() if k in _MANIFEST_COUNTERS})
-            else:
-                out[name] = upsert.upsert(df)
-                m = upsert._manifest()
-                cat.mark_complete(name, rows=m["rows"], counters={"upsert_version": m["version"]})
+            # the observed aggregates also go into the manifest: a later
+            # stage reads them back on resume without re-scanning
+            # (signatures non_deduplicable → lsh_band_rows)
+            out[name] = cat.write(name, df, counters=lambda: _observed(obs))
             cat.log_lineage(name, {"rows_out": cat.manifest(name)["rows"],
                                    **_observed(obs), **counters,
                                    "wall_s": round(time.monotonic() - t0, 2),

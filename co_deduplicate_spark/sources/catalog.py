@@ -111,15 +111,15 @@ class StageCatalog:
         return profile
 
     def write(self, name: str, df: DataFrame,
-              counters: dict | Callable[[], dict] | None = None) -> DataFrame:
+              counters: Callable[[], dict] | None = None) -> DataFrame:
         """Write a stage table + manifest; returns the re-read DataFrame so
         downstream stages consume the materialized (checkpointed) data, not
         the live lineage. On the parquet backend, row count and the
         per-partition profile come from the parquet footers (no extra
         count() job); on Iceberg the count comes from the committed
-        snapshot's summary (also job-free). A callable ``counters`` is
-        called once the data has landed — for counters the write job
-        itself observes (``DataFrame.observe``)."""
+        snapshot's summary (also job-free). ``counters`` is called once
+        the data has landed — for counters the write job itself observes
+        (``DataFrame.observe``)."""
         if self.iceberg_db is not None:
             full = f"{self.iceberg_db}.{name}"
             df.writeTo(full).using("iceberg").createOrReplace()
@@ -142,7 +142,7 @@ class StageCatalog:
             "status": "complete",
             "rows": profile["rows_total"],
             "partition_profile": profile,
-            "counters": (counters() if callable(counters) else counters) or {},
+            "counters": counters() if counters else {},
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         self._table_dir(name).mkdir(parents=True, exist_ok=True)
@@ -154,36 +154,9 @@ class StageCatalog:
             return self.spark.table(f"{self.iceberg_db}.{name}")
         return self.spark.read.parquet(str(self._table_dir(name)))
 
-    def mark_complete(self, name: str, rows: int, counters: dict | None = None) -> None:
-        """Manifest-only completion marker for stages whose data lives in a
-        different container (e.g. the UpsertTable-backed enriched stage).
-        Re-marking a stage already written by ``write`` merges counters and
-        keeps its per-partition profile."""
-        self._table_dir(name).mkdir(parents=True, exist_ok=True)
-        manifest = {
-            "table": name,
-            "config_hash": self.config_hash,
-            "status": "complete",
-            "rows": rows,
-            "counters": counters or {},
-            "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        p = self._manifest_path(name)
-        if p.exists():
-            try:
-                prior = json.loads(p.read_text())
-            except (OSError, json.JSONDecodeError):
-                prior = {}
-            if prior.get("config_hash") == self.config_hash:
-                if "partition_profile" in prior:
-                    manifest["partition_profile"] = prior["partition_profile"]
-                manifest["counters"] = {**prior.get("counters", {}),
-                                        **manifest["counters"]}
-        p.write_text(json.dumps(manifest, indent=2))
-
     def partition_summary(self, name: str) -> dict:
         """Compact per-partition lineage fields for log_lineage records."""
-        prof = self.manifest(name).get("partition_profile", {})
+        prof = self.manifest(name)["partition_profile"]
         return {k: prof[k] for k in ("n_partitions", "rows_max", "skew_max_over_mean")
                 if k in prof}
 

@@ -213,13 +213,14 @@ def incremental_update(
     old_edges = old_edges.select("src", "dst", "rules", "session")
     old_touched = old_edges.join(touched_pairs_b, ["src", "dst"], "left_semi")
     old_untouched = old_edges.join(touched_pairs_b, ["src", "dst"], "left_anti")
+    # every touched pair carries a new edge from this session, so it takes
+    # the current stamp (painless updateDuplicatesGraph 229-231) — a string
+    # max would let "s9" win over "s10"
     touched_edges = (
         old_touched.unionByName(new_edges)
         .groupBy("src", "dst")
-        .agg(
-            F.array_distinct(F.flatten(F.collect_list("rules"))).alias("rules"),
-            F.max("session").alias("session"),
-        )
+        .agg(F.array_distinct(F.flatten(F.collect_list("rules"))).alias("rules"))
+        .withColumn("session", F.lit(current_session))
     )
     all_edges = old_untouched.unionByName(touched_edges)
 
@@ -341,6 +342,7 @@ def run_incremental_session(
     import json as _json
     from pathlib import Path
 
+    from ..sources.catalog import StageCatalog
     from ..sources.upsert import UpsertTable
 
     wk = Path(workdir)
@@ -421,11 +423,9 @@ def run_incremental_session(
     for t in (corpus_t, sigs_t, bands_t, labels_t, edges_t):
         t.vacuum()
 
-    lineage = {
-        "stage": f"session__{session_name}",
+    StageCatalog(spark, workdir, chash).log_lineage(f"session__{session_name}", {
         "session": session_name,
         "previous": prev,
-        "config_hash": chash,
         "corpus_rows": corpus_t._manifest()["rows"],
         # kernel invocations this session == delta size (bootstrap/reset:
         # the whole surviving corpus)
@@ -433,9 +433,7 @@ def run_incremental_session(
         else sigs_t._manifest()["rows"],
         "edges_rows": edges_t._manifest()["rows"],
         "new_edges": out["counters"]["n_new_edges"],
-    }
-    with (wk / "lineage.jsonl").open("a") as f:
-        f.write(_json.dumps(lineage) + "\n")
+    })
 
     tmp = pointer.with_suffix(".tmp")
     tmp.write_text(_json.dumps({"session": session_name, "config_hash": chash}))

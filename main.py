@@ -40,7 +40,7 @@ def parse_args(argv):
                         "bucket — only safe on curated corpora)")
     p.add_argument("--enriched", action="store_true",
                    help="also write the per-record enriched table (business view "
-                        "upserted into <workdir>/documents_enriched)")
+                        "stored as the stage table <workdir>/enriched)")
     p.add_argument("--session-name", default=None, help="crawl-session stamp for edge provenance")
     p.add_argument("--cores", type=int, default=None, help="local-mode cores (ignored under spark-submit)")
     return p.parse_args(argv)

@@ -33,7 +33,7 @@ LINEAGE_FIELDS = {
     "cluster_labels": PARTITIONS,
     "clusters": ["duplicate_clusters", "capped_clusters", "max_cluster_size",
                  "chain_max_members", *PARTITIONS],
-    "enriched": [],
+    "enriched": PARTITIONS,
 }
 
 
@@ -77,14 +77,30 @@ def test_stage_loop_lineage_and_observed_counters(spark, pages, tmp_path):
     assert by["clusters"]["duplicate_clusters"] == clusters.filter("is_duplicate").count()
     assert by["clusters"]["capped_clusters"] == clusters.filter("truncated").count()
     assert by["clusters"]["max_cluster_size"] == clusters.agg(F.max("size")).first()[0]
-    assert by["enriched"]["rows_out"] == out["enriched"].count() == N_DOCS
-    assert set(_manifest(wk, "enriched")["counters"]) == {"upsert_version"}
-    for stage in STAGES[:-1]:
+    assert by["enriched"]["rows_out"] == N_DOCS
+    assert _manifest(wk, "enriched")["counters"] == {}
+    for stage in STAGES:
         assert by[stage]["rows_out"] == out[stage].count() == _manifest(wk, stage)["rows"]
 
     # resume: every stage is complete, so the loop appends no lineage record
     run_pipeline(spark, pages, str(wk), CFG, engines=ENGINES, enriched=True)
     assert len(_lineage(wk)) == len(STAGES)
+
+
+def test_rerun_over_fewer_pages_keeps_no_stale_enriched_rows(spark, pages, tmp_path):
+    """A fresh run over half the pages on the same workdir stores exactly
+    the new corpus's records: the enriched table is rewritten, not merged
+    into, so no url that left the corpus survives."""
+    wk = tmp_path / "wk_drift"
+    run_pipeline(spark, pages, str(wk), CFG, engines=ENGINES, enriched=True)
+    half = pages.orderBy("url").limit(N_DOCS // 2)
+    out = run_pipeline(spark, half, str(wk), CFG, resume=False, engines=ENGINES,
+                       enriched=True)
+    corpus_urls = {r["url"] for r in out["corpus"].select("url").collect()}
+    assert len(corpus_urls) == N_DOCS // 2
+    assert {r["url"] for r in out["enriched"].select("url").collect()} == corpus_urls
+    enriched_recs = [r for r in _lineage(wk) if r["stage"] == "enriched"]
+    assert enriched_recs[-1]["rows_out"] == out["corpus"].count()
 
 
 def test_exact_mode_lineage_fields(spark, pages, tmp_path):

@@ -423,6 +423,24 @@ def test_untouched_old_edges_ride_through_verbatim(spark):
     assert ("a1", "a3") in touched or ("a2", "a3") in touched
 
 
+def test_touched_pair_stamped_with_current_session(spark):
+    """A pair touched by a new edge carries the current session's stamp,
+    as the reference stamps it (painless updateDuplicatesGraph 229-231) —
+    not the string-largest of its old and new stamps ("s9" > "s10")."""
+    old_corpus = spark.createDataFrame([("a1", DUP_TEXT), ("a3", DUP_TEXT)],
+                                       "url string, text string")
+    old_edges = spark.createDataFrame(
+        [("a1", "a3", ["minhash-lsh:k3"], "s9")],
+        "src string, dst string, rules array<string>, session string",
+    )
+    old_labels = spark.createDataFrame([("a1", "a1"), ("a3", "a1")],
+                                       "node string, component string")
+    new_pages = spark.createDataFrame([("a3", DUP_TEXT)], "url string, text string")
+    out = incremental_update(old_corpus, old_edges, old_labels, new_pages, CFG, "s10")
+    touched = {(r["src"], r["dst"]): r["session"] for r in out["touched_edges"].collect()}
+    assert touched == {("a1", "a3"): "s10"}
+
+
 def test_incremental_old_bands_require_old_signatures(spark):
     """Band-table reuse without signature reuse would double every old
     doc's band rows (kept + recomputed-as-delta) — the mix is rejected."""

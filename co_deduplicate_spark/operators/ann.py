@@ -69,6 +69,17 @@ def _cos_micro_prenormed(a: Column, an: Column, b: Column, bn: Column) -> Column
     return F.round((_dot(_as_double(a), _as_double(b)) / (an * bn)) * 1_000_000).cast("long")
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best (query_id, neighbor_id, cos_micro) rows per query, with
+    their rank: cos_micro descending, ties to the lowest neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_micro"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cos_micro", "rank")
+    )
+
+
 def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors for each query id (self excluded).
@@ -95,12 +106,7 @@ def cosine_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
                                  F.col("v"), F.col("vn")).alias("cos_micro"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_micro"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_micro", "rank")
-    )
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -111,6 +117,22 @@ def _round_half_away(x: np.ndarray) -> np.ndarray:
     """round-half-away-from-zero (DuckDB / Spark HALF_UP semantics; numpy's
     rint rounds half-to-even and would diverge on exact .5 values)."""
     return np.sign(x) * np.floor(np.abs(x) + 0.5)
+
+
+def _cos_micro_batch(vectors, C: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One batch of vectors against the integer-micro centroid matrix C:
+    (quantized vectors round(x·1e6), int64 micro-cosines B×K, zero-norm
+    row mask). Zero-norm vectors get the deterministic sentinel
+    -1_000_000 (below any real cosine) instead of platform-undefined NaN
+    casts; all values are exact (module docstring)."""
+    Vi = _round_half_away(np.stack([np.asarray(v, dtype=np.float64) for v in vectors]) * 1e6)
+    cn = np.sqrt((C * C).sum(axis=1))
+    vn = np.sqrt((Vi * Vi).sum(axis=1))
+    zero = vn == 0
+    x = (1e6 * (Vi @ C.T)) / (np.where(zero, 1.0, vn)[:, None] * cn[None, :])
+    r = _round_half_away(x).astype(np.int64)
+    r[zero, :] = -1_000_000
+    return Vi, r, zero
 
 
 def _seed_centroids(embeddings: DataFrame, n_centroids: int,
@@ -159,23 +181,15 @@ def kmeans_centroids(embeddings: DataFrame, n_centroids: int = 32,
     # stay below 2^63 — exact, no float53 ceiling on the accumulate path
     partial_schema = "cid int, cnt long, sums array<long>"
     for _ in range(n_iters):
-        cn = np.sqrt((Ci * Ci).sum(axis=1))
         C = Ci  # rebind for closure capture of the CURRENT iteration matrix
 
-        def partials(batches: Iterator[pd.DataFrame], C=C, cn=cn) -> Iterator[pd.DataFrame]:
+        def partials(batches: Iterator[pd.DataFrame], C=C) -> Iterator[pd.DataFrame]:
             acc_s = np.zeros((C.shape[0], C.shape[1]), dtype=np.int64)
             acc_n = np.zeros(C.shape[0], dtype=np.int64)
             for pdf in batches:
                 if not len(pdf):
                     continue
-                Vi = _round_half_away(
-                    np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]]) * 1e6
-                )
-                vn = np.sqrt((Vi * Vi).sum(axis=1))
-                zero = vn == 0
-                x = (1e6 * (Vi @ C.T)) / (np.where(zero, 1.0, vn)[:, None] * cn[None, :])
-                r = _round_half_away(x).astype(np.int64)
-                r[zero, :] = -1_000_000
+                Vi, r, zero = _cos_micro_batch(pdf["v"], C)
                 assign = r.argmax(axis=1)  # first max = lowest cid on ties
                 Vq = Vi.astype(np.int64)
                 # zero-norm vectors carry the sentinel assignment (cid 0 by
@@ -243,15 +257,7 @@ def centroid_cos_micro(embeddings: DataFrame, n_centroids: int = 32,
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def cosc(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for batch in batches:
-            Vi = _round_half_away(
-                np.stack([np.asarray(v, dtype=np.float64) for v in batch]) * 1e6
-            )
-            vn = np.sqrt((Vi * Vi).sum(axis=1))
-            zero = vn == 0
-            x = (1e6 * (Vi @ Ci.T)) / (np.where(zero, 1.0, vn)[:, None] * cn[None, :])
-            r = _round_half_away(x).astype(np.int64)
-            r[zero, :] = -1_000_000  # deterministic sentinel for zero vectors
-            yield pd.Series(list(r))
+            yield pd.Series(list(_cos_micro_batch(batch, Ci)[1]))
 
     return embeddings.select(F.col(id_col).alias("id"), cosc(F.col(vec_col)).alias("cosc"))
 
@@ -321,12 +327,7 @@ def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
         _cos_micro_prenormed(F.col("q"), F.col("qn"),
                              F.col("v"), F.col("vn")).alias("cos_micro"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_micro"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_micro", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def ivf_dup_pairs(embeddings: DataFrame, threshold_micro: int = 400_000,

@@ -24,14 +24,16 @@ Skew (the real 100 TB problem — boilerplate pages collapse into mega-bands):
     mega-buckets. This is the intended trade (mega-buckets are boilerplate
     collisions; their members are usually near-identical, as in the
     mega-cluster test where recall stays 1.0), and it is observable:
-    bucket histograms and pre/post-verification edge counts are logged to
-    lineage, never silently dropped (SURVEY.md §7 step 5). Exact pair
-    semantics for mega-buckets requires star_reduce off.
+    the bucket profile (:func:`hot_buckets`) and pre/post-verification
+    edge counts are logged to lineage, never silently dropped (SURVEY.md
+    §7 step 5). Exact pair semantics for every bucket takes a threshold at
+    least as large as the largest bucket: no bucket is hot, and the plan
+    is the exact one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
@@ -83,17 +85,35 @@ def band_table(signatures: DataFrame, cfg: DedupConfig, doc_col: str = "doc",
 _HOT_BROADCAST_CAP = 2_000_000
 
 
-def hot_buckets(bands: DataFrame, threshold: int) -> DataFrame:
+def hot_buckets(bands: DataFrame, threshold: int) -> tuple[DataFrame, Observation]:
     """(band_id, band_hash, bucket_n, bucket_min) for buckets above the
     threshold — ONE map-side-combined aggregation over the band table,
-    checkpointed (tiny by definition). Shared by candidate_pairs and the
+    checkpointed (tiny by definition) — and the profile of EVERY bucket,
+    observed on that aggregate before the filter, so the checkpoint job
+    computes it and reading it runs no job: ``band_rows`` (Σn),
+    ``n_buckets``, ``max_bucket``, ``hot_buckets`` (n > threshold),
+    ``clique_pairs_if_exact`` (Σ n(n-1)/2) and ``hot_clique_pairs_avoided``
+    (the same sum over the hot buckets). Shared by candidate_pairs and the
     pipeline's lineage counters so the band table is aggregated once."""
-    return (
+    profile = Observation()
+    is_hot = F.col("bucket_n") > threshold
+    pairs = F.expr("bucket_n * (bucket_n - 1) div 2")
+    hot = (
         bands.groupBy("band_id", "band_hash")
         .agg(F.count(F.lit(1)).alias("bucket_n"), F.min("doc").alias("bucket_min"))
-        .filter(F.col("bucket_n") > threshold)
+        .observe(
+            profile,
+            F.sum("bucket_n").alias("band_rows"),
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.max("bucket_n").alias("max_bucket"),
+            F.sum(is_hot.cast("long")).alias("hot_buckets"),
+            F.sum(pairs).alias("clique_pairs_if_exact"),
+            F.sum(F.when(is_hot, pairs)).alias("hot_clique_pairs_avoided"),
+        )
+        .filter(is_hot)
         .localCheckpoint()
     )
+    return hot, profile
 
 
 def candidate_pairs(bands: DataFrame, cfg: DedupConfig,
@@ -139,7 +159,7 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig,
         return exact_cliques(bands).distinct()
 
     if hot is None:
-        hot = hot_buckets(bands, star_reduce_threshold)
+        hot, _ = hot_buckets(bands, star_reduce_threshold)
     n_hot = hot.count()
     if n_hot == 0:
         # clean corpus: the default plan IS the exact plan (plus one cheap

@@ -76,7 +76,8 @@ Scale strategy (100 TB / 10^12 docs):
     The signatures table written back is url + 128 longs — ~1 KB/doc, no
     document bodies move after this stage.
   * band join: shuffle keys are (band_id, band_hash) 16-byte pairs; AQE
-    skew-join plus optional star reduction for mega-buckets (lsh.py).
+    skew-join plus star reduction of buckets above ``cfg.band_bucket_cap``
+    (lsh.py), whose one bucket aggregate also yields the bucket profile.
   * verification joins only candidate pairs to the cached shingle sets —
     never a cross product.
   * CC: O(log n) star rounds, each a localCheckpoint to cut lineage.
@@ -178,68 +179,27 @@ class EngineInputs(NamedTuple):
     features: DataFrame  # corpus_features, persisted for the engines that read it
     embeddings: DataFrame | None
     rule_spec: object
-    star_threshold: int | None  # None: exact LSH cliques for every bucket
-    signed_docs: int  # docs with a non-NULL signature
 
 
 def _minhash_engine(x: EngineInputs, cfg: DedupConfig, counters: dict) -> DataFrame:
     bands = band_table(x.signatures, cfg)
-    if x.star_threshold is not None:
-        # no-silent-caps: hot-bucket profile rides into lineage on every
-        # run. ONE map-side-combined aggregation over the band table
-        # (shared with candidate_pairs via the checkpointed hot table);
-        # everything else derives from the tiny hot set plus the
-        # signatures manifest — the earlier full-histogram pass cost a
-        # second 32×n-row aggregation per run.
-        hot = hot_buckets(bands, x.star_threshold)
-        hstats = hot.select(
-            F.count(F.lit(1)).alias("n"),
-            F.max("bucket_n").alias("max_n"),
-            F.sum(F.expr("bucket_n * (bucket_n - 1) div 2")).alias("pairs"),
-        ).collect()[0]
-        counters.update(
-            {
-                "lsh_hot_buckets": int(hstats["n"]),
-                "lsh_max_hot_bucket": int(hstats["max_n"] or 0),
-                "lsh_hot_clique_pairs_avoided": int(hstats["pairs"] or 0),
-                "lsh_star_threshold": x.star_threshold,
-                "lsh_band_rows": x.signed_docs * cfg.lsh_bands,
-            }
-        )
-        cands = candidate_pairs(bands, cfg, star_reduce_threshold=x.star_threshold,
-                                hot=hot)
-        if counters["lsh_hot_buckets"] > 0:
-            # star reduction actually engaged: it trades pair recall in
-            # mega-buckets for O(b) edges (lsh.py docstring) — make the
-            # trade observable: pre-verification candidate count rides
-            # into lineage. (Clean corpora skip this count job; the hot
-            # profile proves nothing was reduced.)
-            cands = cands.localCheckpoint()
-            counters["minhash_candidates_pre_verify"] = cands.count()
-    else:
-        # exact opt-out: the caller chose the quadratic path — spend a
-        # full bucket histogram pass to WARN about what that costs
-        bstats = (
-            bands.groupBy("band_id", "band_hash")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.count(F.lit(1)).alias("n_buckets"),
-                F.max("n").alias("max_bucket"),
-                F.sum((F.col("n") > cfg.band_bucket_cap).cast("long")).alias("hot"),
-                F.sum(F.expr("n * (n - 1) div 2")).alias("clique_pairs"),
-            )
-            .collect()[0]
-        )
-        counters.update(
-            {
-                "lsh_n_buckets": int(bstats["n_buckets"]),
-                "lsh_max_bucket": int(bstats["max_bucket"] or 0),
-                "lsh_hot_buckets": int(bstats["hot"] or 0),
-                "lsh_clique_pairs_exact_mode": int(bstats["clique_pairs"] or 0),
-                "lsh_star_threshold": None,
-            }
-        )
-        cands = candidate_pairs(bands, cfg, star_reduce_threshold=None)
+    # no-silent-caps: the full bucket profile rides into lineage on every
+    # run, observed by the job that checkpoints the hot-bucket table — ONE
+    # aggregation over the band table, shared with candidate_pairs.
+    # Buckets above band_bucket_cap are star-reduced; a cap at least as
+    # large as the largest bucket leaves none hot, and the plan is exact.
+    hot, profile = hot_buckets(bands, cfg.band_bucket_cap)
+    counters.update({f"lsh_{k}": v for k, v in _observed(profile).items()})
+    counters["lsh_star_threshold"] = cfg.band_bucket_cap
+    cands = candidate_pairs(bands, cfg, star_reduce_threshold=cfg.band_bucket_cap, hot=hot)
+    if counters["lsh_hot_buckets"] > 0:
+        # star reduction actually engaged: it trades pair recall in
+        # mega-buckets for O(b) edges (lsh.py docstring) — make the
+        # trade observable: pre-verification candidate count rides
+        # into lineage. (Clean corpora skip this count job; the bucket
+        # profile proves nothing was reduced.)
+        cands = cands.localCheckpoint()
+        counters["minhash_candidates_pre_verify"] = cands.count()
     # candidate_pairs ends in distinct(); the shingle sets are cached
     shingles = x.features.select("doc", F.col("shingles").alias("tokens"),
                                  F.col("n_shingles").alias("n_tokens"))
@@ -408,7 +368,7 @@ def enriched_stage(clusters: DataFrame, corpus: DataFrame, labels: DataFrame,
 
 
 def _observed(obs: Observation | None) -> dict:
-    """A stage's observed lineage aggregates as ints (NULL → 0)."""
+    """Observed lineage aggregates as ints (NULL → 0)."""
     return {} if obs is None else {k: int(v or 0) for k, v in obs.get.items()}
 
 
@@ -418,7 +378,6 @@ def run_pipeline(
     workdir: str,
     cfg: DedupConfig | None = None,
     resume: bool = True,
-    star_reduce: bool = True,
     engines: tuple[str, ...] = ("minhash",),
     enriched: bool = False,
     rule_spec=None,
@@ -445,14 +404,20 @@ def run_pipeline(
     (plans/scenarios.py::page_rules_spec), which consumes the stage-1
     ``quality_flags`` column as its P14 `_ignored` gate.
 
-    ``star_reduce``: the default (True) star-reduces LSH buckets larger
-    than ``cfg.band_bucket_cap`` — smaller buckets keep exact cliques —
-    so the out-of-the-box plan is the one that survives a boilerplate
-    mega-bucket at 100× (O(b) star edges instead of O(b²) pairs;
-    connectivity preserved, see operators/lsh.py). Pass ``False`` to opt
-    out into exact pair semantics for every bucket (the exotic path:
-    quadratic in the hottest bucket, only safe on curated corpora).
-    Bucket-size stats are logged to lineage on every non-resumed run.
+    LSH blocking has one mode: buckets larger than ``cfg.band_bucket_cap``
+    are star-reduced — smaller buckets keep exact cliques — so the plan is
+    the one that survives a boilerplate mega-bucket at 100× (O(b) star
+    edges instead of O(b²) pairs; connectivity preserved, see
+    operators/lsh.py). Exact pair semantics for every bucket takes a cap
+    at least as large as the largest bucket (quadratic in the hottest
+    bucket, only safe on curated corpora). The full bucket profile
+    (``lsh_n_buckets``, ``lsh_max_bucket``, ``lsh_hot_buckets``,
+    ``lsh_clique_pairs_if_exact``, ...) is logged to lineage on every
+    non-resumed run.
+
+    The corpus urls must be unique: before the clusters stage is built,
+    the cluster_labels row count (one row per distinct url) is checked
+    against the corpus row count, and a mismatch raises ``ValueError``.
 
     ``enriched``: also run the enriched stage, stored like every other
     stage as ``<workdir>/enriched`` and rewritten whole on each
@@ -475,14 +440,10 @@ def run_pipeline(
     if "ann" in engines and embeddings is None:
         raise ValueError('engine "ann" requires an embeddings DataFrame '
                          "with columns (url, embedding)")
-    star_threshold = cfg.band_bucket_cap if star_reduce else None
-    # engine selection + bucket-reduction mode + rule config participate in
-    # the stage-invalidation hash: a resume must never reuse candidate_edges
-    # computed under a different engine set, star/exact mode, or rule set
-    config_hash = (
-        f"{cfg.config_hash()}-{'+'.join(sorted(engines))}"
-        f"-star{int(star_threshold is not None)}"
-    )
+    # engine selection + rule config participate in the stage-invalidation
+    # hash: a resume must never reuse candidate_edges computed under a
+    # different engine set or rule set
+    config_hash = f"{cfg.config_hash()}-{'+'.join(sorted(engines))}"
     if "rules" in engines:
         config_hash += f"-rules{rule_spec.config_key()}"
     cat = StageCatalog(spark, workdir, config_hash)
@@ -503,19 +464,29 @@ def run_pipeline(
         while held:
             held.pop().unpersist()
 
-    def engine_inputs() -> EngineInputs:
-        m = cat.manifest("signatures")
-        return EngineInputs(out["corpus"], out["signatures"], features(), embeddings,
-                            rule_spec, star_threshold,
-                            m["rows"] - int(m["counters"].get("non_deduplicable", 0)))
+    def unique_url_labels() -> DataFrame:
+        # cluster_labels holds one row per distinct corpus url (plus any
+        # edge endpoint outside the corpus), so the two footer counts are
+        # equal exactly when the corpus urls are unique and every edge
+        # endpoint is a corpus url; a duplicated url would otherwise be
+        # counted twice in its cluster's size
+        n_corpus = cat.manifest("corpus")["rows"]
+        n_labels = cat.manifest("cluster_labels")["rows"]
+        if n_labels != n_corpus:
+            raise ValueError(
+                f"corpus urls must be unique and every edge endpoint a corpus url: "
+                f"corpus has {n_corpus} rows, cluster_labels {n_labels} distinct urls")
+        return out["cluster_labels"]
 
     stages = [
         ("corpus", lambda: corpus_stage(pages, cfg)),
         ("signatures", lambda: signatures_stage(features(), cfg)),
-        ("candidate_edges", lambda: candidate_edges_stage(engine_inputs(), cfg, engines)),
+        ("candidate_edges", lambda: candidate_edges_stage(
+            EngineInputs(out["corpus"], out["signatures"], features(), embeddings, rule_spec),
+            cfg, engines)),
         ("cluster_labels", lambda: cluster_labels_stage(
             out["candidate_edges"], out["corpus"], cfg)),
-        ("clusters", lambda: clusters_stage(out["cluster_labels"], out["corpus"], cfg)),
+        ("clusters", lambda: clusters_stage(unique_url_labels(), out["corpus"], cfg)),
     ]
     if enriched:
         stages.append(("enriched", lambda: enriched_stage(
@@ -533,9 +504,8 @@ def run_pipeline(
             if aggs:  # computed by the write job below, no counting job
                 obs = Observation(f"lineage.{name}")
                 df = df.observe(obs, *(c.alias(k) for k, c in aggs.items()))
-            # the observed aggregates also go into the manifest: a later
-            # stage reads them back on resume without re-scanning
-            # (signatures non_deduplicable → lsh_band_rows)
+            # the observed aggregates also go into the manifest, so a
+            # stored stage keeps its counters next to its data
             out[name] = cat.write(name, df, counters=lambda: _observed(obs))
             cat.log_lineage(name, {"rows_out": cat.manifest(name)["rows"],
                                    **_observed(obs), **counters,

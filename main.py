@@ -11,7 +11,10 @@ Local smoke:
 
 The job is idempotently resumable: re-running with the same config skips
 completed stages (config-hash manifests); pass --no-resume to force
-recompute. Prints one JSON line of run stats.
+recompute. LSH buckets larger than DedupConfig.band_bucket_cap are
+star-reduced (operators/lsh.py); exact cliques for every bucket take a
+cap at least as large as the largest bucket, through the API. Prints one
+JSON line of run stats.
 """
 
 from __future__ import annotations
@@ -34,10 +37,6 @@ def parse_args(argv):
                         "a custom RuleEngineSpec; the ann engine needs an "
                         "embeddings DataFrame and is API-only)")
     p.add_argument("--no-resume", action="store_true", help="ignore existing stage manifests")
-    p.add_argument("--exact-buckets", action="store_true",
-                   help="opt OUT of the default mega-bucket star reduction: emit exact "
-                        "pair cliques for every LSH bucket (quadratic in the hottest "
-                        "bucket — only safe on curated corpora)")
     p.add_argument("--enriched", action="store_true",
                    help="also write the per-record enriched table (business view "
                         "stored as the stage table <workdir>/enriched)")
@@ -78,7 +77,6 @@ def main(argv=None) -> int:
     out = run_pipeline(
         spark, pages, args.workdir, cfg,
         resume=not args.no_resume,
-        star_reduce=not args.exact_buckets,
         engines=engines, enriched=args.enriched,
     )
     from pyspark.sql import functions as F

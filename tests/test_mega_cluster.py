@@ -37,7 +37,7 @@ def pages(spark):
 
 
 def test_mega_cluster_capped_not_silent(spark, pages, tmp_path):
-    # NO star_reduce flag: the DEFAULT plan must be the 100×-safe one
+    # one blocking mode: the plan must be the 100×-safe one
     wk = str(tmp_path / "wk")
     out = run_pipeline(spark, pages, wk, CFG)
     clusters = out["clusters"]
@@ -65,7 +65,7 @@ def test_mega_cluster_capped_not_silent(spark, pages, tmp_path):
     assert clusters_rec["capped_clusters"] == 1
     assert clusters_rec["max_cluster_size"] >= N_MEGA
     edges_rec = [r for r in lineage if r["stage"] == "candidate_edges"][-1]
-    assert edges_rec["lsh_max_hot_bucket"] >= N_MEGA
+    assert edges_rec["lsh_max_bucket"] >= N_MEGA
     assert edges_rec["lsh_hot_buckets"] >= 1
     assert edges_rec["lsh_star_threshold"] == CFG.band_bucket_cap
     # the whole point: the star-reduced candidate set is O(b), not O(b²)

@@ -11,6 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from co_deduplicate_spark.config import DedupConfig
+from co_deduplicate_spark.operators.jaccard import verify_candidates
+from co_deduplicate_spark.operators.lsh import band_table, candidate_pairs
 from co_deduplicate_spark.operators.minhash import text_features
 from co_deduplicate_spark.plans.pipeline import run_pipeline
 from co_deduplicate_spark.sources.pages import synth_pages
@@ -23,13 +25,14 @@ CFG = DedupConfig(max_doc_chars=1200, window_max_df=2)
 ENGINES = ("minhash", "window")
 STAGES = ["corpus", "signatures", "candidate_edges", "cluster_labels", "clusters", "enriched"]
 PARTITIONS = ["n_partitions", "rows_max", "skew_max_over_mean"]
+# the bucket profile observed on the hot-bucket aggregate, on every run
+LSH_PROFILE = ["lsh_band_rows", "lsh_n_buckets", "lsh_max_bucket", "lsh_hot_buckets",
+               "lsh_clique_pairs_if_exact", "lsh_hot_clique_pairs_avoided"]
 LINEAGE_FIELDS = {
     "corpus": ["flagged_records", *PARTITIONS],
     "signatures": ["non_deduplicable", *PARTITIONS],
-    "candidate_edges": ["engines", "lsh_hot_buckets", "lsh_max_hot_bucket",
-                        "lsh_hot_clique_pairs_avoided", "lsh_star_threshold",
-                        "lsh_band_rows", "window_max_df", "window_hot_keys_dropped",
-                        *PARTITIONS],
+    "candidate_edges": ["engines", *LSH_PROFILE, "lsh_star_threshold",
+                        "window_max_df", "window_hot_keys_dropped", *PARTITIONS],
     "cluster_labels": PARTITIONS,
     "clusters": ["duplicate_clusters", "capped_clusters", "max_cluster_size",
                  "chain_max_members", *PARTITIONS],
@@ -103,19 +106,65 @@ def test_rerun_over_fewer_pages_keeps_no_stale_enriched_rows(spark, pages, tmp_p
     assert enriched_recs[-1]["rows_out"] == out["corpus"].count()
 
 
-def test_exact_mode_lineage_fields(spark, pages, tmp_path):
-    """star_reduce=False logs the full bucket histogram; recount it from
-    the stored signatures."""
-    from co_deduplicate_spark.operators.lsh import band_table
-
-    wk = tmp_path / "wk_exact"
-    out = run_pipeline(spark, pages, str(wk), CFG, star_reduce=False)
+def test_bucket_profile_lineage_fields(spark, pages, tmp_path):
+    """The one blocking mode logs the full bucket profile; with a cap low
+    enough that some buckets are hot, recount every lsh_* field from the
+    stored signatures."""
+    cfg = DedupConfig(band_bucket_cap=2)
+    wk = tmp_path / "wk_profile"
+    out = run_pipeline(spark, pages, str(wk), cfg)
     rec = {r["stage"]: r for r in _lineage(wk)}["candidate_edges"]
-    sizes = [r["n"] for r in band_table(out["signatures"], CFG)
-             .groupBy("band_id", "band_hash").agg(F.count("*").alias("n")).collect()]
-    assert rec["lsh_star_threshold"] is None
+    bands = band_table(out["signatures"], cfg)
+    sizes = [r["n"] for r in bands.groupBy("band_id", "band_hash")
+             .agg(F.count("*").alias("n")).collect()]
+    hot = [n for n in sizes if n > cfg.band_bucket_cap]
+    assert hot
+    assert sorted(k for k in rec if k.startswith("lsh_")) == sorted(
+        [*LSH_PROFILE, "lsh_star_threshold"])
+    assert rec["lsh_star_threshold"] == cfg.band_bucket_cap
+    assert rec["lsh_band_rows"] == sum(sizes)
     assert rec["lsh_n_buckets"] == len(sizes)
-    assert rec["lsh_max_bucket"] == max(sizes) > 1
-    assert rec["lsh_hot_buckets"] == sum(n > CFG.band_bucket_cap for n in sizes)
-    assert rec["lsh_clique_pairs_exact_mode"] == sum(n * (n - 1) // 2 for n in sizes)
-    assert rec["lsh_clique_pairs_exact_mode"] >= rec["rows_out"] > 0
+    assert rec["lsh_max_bucket"] == max(sizes)
+    assert rec["lsh_hot_buckets"] == len(hot)
+    assert rec["lsh_clique_pairs_if_exact"] == sum(n * (n - 1) // 2 for n in sizes)
+    assert rec["lsh_hot_clique_pairs_avoided"] == sum(n * (n - 1) // 2 for n in hot)
+    # star reduction engaged, so the pre-verification count is logged too
+    assert rec["minhash_candidates_pre_verify"] == candidate_pairs(
+        bands, cfg, star_reduce_threshold=cfg.band_bucket_cap).count()
+
+
+def test_cap_above_largest_bucket_is_exact(spark, pages, tmp_path):
+    """Exact cliques for every bucket stay reachable through the config: a
+    band_bucket_cap at least as large as the largest bucket (no bucket
+    holds more docs than the corpus) leaves none hot, and the MinHash
+    edges equal the exact candidate set, verified."""
+    cfg = DedupConfig(band_bucket_cap=N_DOCS)
+    wk = tmp_path / "wk_exact"
+    out = run_pipeline(spark, pages, str(wk), cfg)
+    rec = {r["stage"]: r for r in _lineage(wk)}["candidate_edges"]
+    assert rec["lsh_hot_buckets"] == 0
+    assert 1 < rec["lsh_max_bucket"] <= cfg.band_bucket_cap
+    assert "minhash_candidates_pre_verify" not in rec
+    edges = {(r.src, r.dst) for r in out["candidate_edges"].collect()}
+    exact = candidate_pairs(band_table(out["signatures"], cfg), cfg,
+                            star_reduce_threshold=None)
+    verified = {(r.src, r.dst) for r in verify_candidates(
+        exact, out["corpus"], id_col="url", threshold=cfg.jaccard_threshold,
+        shingle_k=cfg.shingle_k).collect()}
+    assert edges and edges == verified
+
+
+def test_duplicated_url_raises_before_clusters(spark, pages, tmp_path):
+    """cluster_labels has one row per distinct corpus url, so a corpus with
+    a duplicated url fails the footer-count check before the clusters
+    stage is built — instead of counting that url twice in its cluster's
+    size — on a fresh run and on one that resumes the earlier stages."""
+    dup = pages.unionByName(pages.orderBy("url").limit(1))
+    wk = tmp_path / "wk_dup"
+    msg = f"corpus has {N_DOCS + 1} rows, cluster_labels {N_DOCS} distinct urls"
+    with pytest.raises(ValueError, match=msg):
+        run_pipeline(spark, dup, str(wk), CFG)
+    assert not (wk / "clusters" / "_STAGE_MANIFEST.json").exists()
+    with pytest.raises(ValueError, match=msg):
+        run_pipeline(spark, dup, str(wk), CFG)
+    assert [r["stage"] for r in _lineage(wk)] == STAGES[:4]

@@ -118,7 +118,7 @@ def hot_buckets(bands: DataFrame, threshold: int) -> tuple[DataFrame, Observatio
 
 def candidate_pairs(bands: DataFrame, cfg: DedupConfig,
                     star_reduce_threshold: int | None = None,
-                    hot: DataFrame | None = None) -> DataFrame:
+                    hot: tuple[DataFrame, Observation] | None = None) -> DataFrame:
     """Self-join band table on (band_id, band_hash) → distinct (src < dst).
 
     ``star_reduce_threshold=None`` emits every intra-bucket pair (exact
@@ -136,6 +136,11 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig,
     on 600k pages × local[16] (144 s vs 80 s pipeline wall); the aggregate
     probe costs ~2 s. Degenerate fallback: if more than 2M buckets are hot
     the broadcast assumption is void and the window plan is used.
+
+    ``hot``: the :func:`hot_buckets` result for ``bands`` at this
+    threshold, when the caller also reads its profile; computed here
+    otherwise. The hot-bucket count comes from that profile, which the
+    checkpoint job filled, so no job counts the hot table.
 
     The self-join expands ``bands`` once per side: pass a stored or
     checkpointed band table. Bands still computed by the Arrow signature
@@ -158,9 +163,8 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig,
     if star_reduce_threshold is None:
         return exact_cliques(bands).distinct()
 
-    if hot is None:
-        hot, _ = hot_buckets(bands, star_reduce_threshold)
-    n_hot = hot.count()
+    hot, profile = hot or hot_buckets(bands, star_reduce_threshold)
+    n_hot = profile.get["hot_buckets"] or 0
     if n_hot == 0:
         # clean corpus: the default plan IS the exact plan (plus one cheap
         # aggregate probe over the band table)

@@ -23,7 +23,7 @@ directly over its persisted kernel frame.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .minhash import text_features
@@ -139,15 +139,20 @@ def window_pairs(windows: DataFrame, max_df: int | None) -> tuple[DataFrame, int
         import logging
 
         # df per key aggregates map-side (count combine); the hot list is
-        # tiny by definition (keys with df > cap)
+        # tiny by definition (keys with df > cap). The dropped-key count is
+        # observed on the aggregate before the filter, so the checkpoint
+        # job computes it and no job counts the hot list.
+        is_hot = F.col("df") > max_df
+        dropped = Observation()
         hot = (
             windows.groupBy("wkey")
             .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
+            .observe(dropped, F.sum(is_hot.cast("long")).alias("hot_keys"))
+            .filter(is_hot)
             .select("wkey")
             .localCheckpoint()
         )
-        n_dropped = hot.count()
+        n_dropped = dropped.get["hot_keys"] or 0
         logging.getLogger(__name__).info(
             "suffix_window_pairs max_df=%d: dropping %d hot window keys "
             "from candidate generation", max_df, n_dropped,

@@ -31,10 +31,14 @@ the manifest counters (every observed aggregate), and the lineage
 record, always the stage's last call. Every stage, the enriched one
 included, is one StageCatalog table under ``<workdir>/<stage>``,
 rewritten whole on a non-resumed run: the batch recomputes every record,
-so nothing is merged into an earlier run's rows. Keyed MERGE
+so nothing is merged into an earlier run's rows. Its manifest stores
+the written schema, and every read of a stage table, the write's own
+re-read and a resumed stage alike, takes that schema instead of inferring
+one from the files in a Spark job. Keyed MERGE
 (sources/upsert.py) is for state where only touched records change, the
 incremental session tables (streaming/incremental.py). The candidate
-stage's engines are one table too, :data:`ENGINES`.
+stage's engines are one table too, :data:`ENGINES`; the selected ones are
+built concurrently, one thread each, and unioned in that table's order.
 The text kernel (operators/minhash.py::text_features_udf) tokenizes each
 document once for every engine: :func:`corpus_features` runs it for the
 signatures' ``minhash`` + ``n_shingles`` plus the field of each selected
@@ -87,8 +91,10 @@ from __future__ import annotations
 
 import functools
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -191,7 +197,8 @@ def _minhash_engine(x: EngineInputs, cfg: DedupConfig, counters: dict) -> DataFr
     hot, profile = hot_buckets(bands, cfg.band_bucket_cap)
     counters.update({f"lsh_{k}": v for k, v in _observed(profile).items()})
     counters["lsh_star_threshold"] = cfg.band_bucket_cap
-    cands = candidate_pairs(bands, cfg, star_reduce_threshold=cfg.band_bucket_cap, hot=hot)
+    cands = candidate_pairs(bands, cfg, star_reduce_threshold=cfg.band_bucket_cap,
+                            hot=(hot, profile))
     if counters["lsh_hot_buckets"] > 0:
         # star reduction actually engaged: it trades pair recall in
         # mega-buckets for O(b) edges (lsh.py docstring) — make the
@@ -303,9 +310,27 @@ ENGINES = {
 
 def candidate_edges_stage(x: EngineInputs, cfg: DedupConfig,
                           engines: tuple[str, ...]) -> StageOutput:
-    """Per-engine candidates + verify + per-pair provenance union."""
+    """Per-engine candidates + verify + per-pair provenance union.
+
+    The engines are independent clauses of one disjunction (the
+    reference's bool-should, deduplicateQueryBuilder.js:56-67), so they
+    are built concurrently, one thread each: their eager pre-passes
+    (hot-bucket and hot-key checkpoints, the rules base) and the driver's
+    planning between them overlap instead of queueing. Each thread
+    inherits the caller's job group and local properties, and each engine
+    fills its own counters dict; both the union and the counters follow
+    :data:`ENGINES` order, whatever order the threads finish in."""
+    # one inheritable_thread_target call per engine: each call copies the
+    # caller's local properties, so no two threads share (and mutate) one
+    spark = x.corpus.sparkSession
+    built = [inheritable_thread_target(spark)(fn)
+             for name, fn in ENGINES.items() if name in engines]
+    per_counters = [{} for _ in built]
+    with ThreadPoolExecutor(len(built)) as pool:
+        per_engine = list(pool.map(lambda build, c: build(x, cfg, c), built, per_counters))
     counters: dict = {"engines": list(engines)}
-    per_engine = [fn(x, cfg, counters) for name, fn in ENGINES.items() if name in engines]
+    for c in per_counters:
+        counters.update(c)
     union = functools.reduce(DataFrame.unionByName, per_engine)
     # P11/A5: per-pair sorted rule union (documentsManager.js:292-298);
     # score = best evidence across engines. r6 (guide §2.4): when ONE

@@ -24,6 +24,7 @@ from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 MANIFEST_NAME = "_STAGE_MANIFEST.json"
 
@@ -77,7 +78,10 @@ class StageCatalog:
             m = json.loads(p.read_text())
         except (OSError, json.JSONDecodeError):
             return False
-        return m.get("config_hash") == self.config_hash and m.get("status") == "complete"
+        # a manifest without the written schema predates schema-typed
+        # reads: the stage recomputes rather than infer a schema
+        return (m.get("config_hash") == self.config_hash and m.get("status") == "complete"
+                and "schema" in m)
 
     def _partition_profile(self, path: str) -> dict:
         """Per-partition lineage from parquet footers (one output file per
@@ -116,10 +120,12 @@ class StageCatalog:
         downstream stages consume the materialized (checkpointed) data, not
         the live lineage. On the parquet backend, row count and the
         per-partition profile come from the parquet footers (no extra
-        count() job); on Iceberg the count comes from the committed
-        snapshot's summary (also job-free). ``counters`` is called once
-        the data has landed — for counters the write job itself observes
-        (``DataFrame.observe``)."""
+        count() job), and the re-read takes the written schema, which the
+        manifest stores for later reads (no schema-inference job); on
+        Iceberg the count comes from the committed snapshot's summary
+        (also job-free). ``counters`` is called once the data has landed —
+        for counters the write job itself observes (``DataFrame.observe``)."""
+        schema = df.schema
         if self.iceberg_db is not None:
             full = f"{self.iceberg_db}.{name}"
             df.writeTo(full).using("iceberg").createOrReplace()
@@ -135,7 +141,7 @@ class StageCatalog:
             path = str(self._table_dir(name))
             df.write.mode("overwrite").parquet(path)
             profile = self._partition_profile(path)
-            out = self.spark.read.parquet(path)
+            out = self.spark.read.schema(schema).parquet(path)
         manifest = {
             "table": name,
             "config_hash": self.config_hash,
@@ -143,6 +149,7 @@ class StageCatalog:
             "rows": profile["rows_total"],
             "partition_profile": profile,
             "counters": counters() if counters else {},
+            "schema": schema.json(),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         self._table_dir(name).mkdir(parents=True, exist_ok=True)
@@ -152,7 +159,8 @@ class StageCatalog:
     def read(self, name: str) -> DataFrame:
         if self.iceberg_db is not None:
             return self.spark.table(f"{self.iceberg_db}.{name}")
-        return self.spark.read.parquet(str(self._table_dir(name)))
+        schema = T.StructType.fromJson(json.loads(self.manifest(name)["schema"]))
+        return self.spark.read.schema(schema).parquet(str(self._table_dir(name)))
 
     def partition_summary(self, name: str) -> dict:
         """Compact per-partition lineage fields for log_lineage records."""

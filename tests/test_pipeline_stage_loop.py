@@ -22,17 +22,20 @@ N_DOCS = 300  # the small page fixture of test_pages_pipeline.py
 # flagged and the observed flag counter is not trivially zero; likewise a
 # window cap low enough that the window engine drops some hot keys
 CFG = DedupConfig(max_doc_chars=1200, window_max_df=2)
-ENGINES = ("minhash", "window")
+# listed against pipeline.ENGINES order: the counters must follow that order
+ENGINES = ("window", "minhash")
 STAGES = ["corpus", "signatures", "candidate_edges", "cluster_labels", "clusters", "enriched"]
 PARTITIONS = ["n_partitions", "rows_max", "skew_max_over_mean"]
 # the bucket profile observed on the hot-bucket aggregate, on every run
 LSH_PROFILE = ["lsh_band_rows", "lsh_n_buckets", "lsh_max_bucket", "lsh_hot_buckets",
                "lsh_clique_pairs_if_exact", "lsh_hot_clique_pairs_avoided"]
+# the candidate_edges counters in pipeline.ENGINES order: minhash, then window
+EDGE_COUNTERS = ["engines", *LSH_PROFILE, "lsh_star_threshold",
+                 "window_max_df", "window_hot_keys_dropped"]
 LINEAGE_FIELDS = {
     "corpus": ["flagged_records", *PARTITIONS],
     "signatures": ["non_deduplicable", *PARTITIONS],
-    "candidate_edges": ["engines", *LSH_PROFILE, "lsh_star_threshold",
-                        "window_max_df", "window_hot_keys_dropped", *PARTITIONS],
+    "candidate_edges": [*EDGE_COUNTERS, *PARTITIONS],
     "cluster_labels": PARTITIONS,
     "clusters": ["duplicate_clusters", "capped_clusters", "max_cluster_size",
                  "chain_max_members", *PARTITIONS],
@@ -62,6 +65,9 @@ def test_stage_loop_lineage_and_observed_counters(spark, pages, tmp_path):
         common = ["stage", "config_hash", "written_at", "rows_out", "wall_s"]
         assert sorted(r) == sorted(common + LINEAGE_FIELDS[r["stage"]]), r["stage"]
     by = {r["stage"]: r for r in recs}
+    # the engines run concurrently, but their counters merge in ENGINES order
+    assert [k for k in by["candidate_edges"] if k in EDGE_COUNTERS] == EDGE_COUNTERS
+    assert by["candidate_edges"]["engines"] == list(ENGINES)
 
     corpus, sigs, clusters = out["corpus"], out["signatures"], out["clusters"]
     n_flagged = corpus.filter(F.size("quality_flags") > 0).count()
@@ -168,3 +174,29 @@ def test_duplicated_url_raises_before_clusters(spark, pages, tmp_path):
     with pytest.raises(ValueError, match=msg):
         run_pipeline(spark, dup, str(wk), CFG)
     assert [r["stage"] for r in _lineage(wk)] == STAGES[:4]
+
+
+# Jobs one run_pipeline over the fixture submits with the four batch_dedup
+# engines and the enriched stage: 57 when this budget was set. A change that
+# adds jobs must raise it and say why; one that removes jobs should lower it
+# to the new count that this test prints on failure.
+JOB_BUDGET = 57
+
+
+def test_job_group_inherited_and_job_budget(spark, pages, tmp_path):
+    """Every job of a run carries the caller's job group, the concurrent
+    candidate engines' included: the group's job ids form one contiguous
+    range (a job submitted outside the group would leave a gap, as nothing
+    else runs meanwhile). Their count is held to :data:`JOB_BUDGET`."""
+    sc = spark.sparkContext
+    group = "test_job_budget"
+    sc.setJobGroup(group, "run_pipeline job budget")
+    try:
+        run_pipeline(spark, pages, str(tmp_path / "wk_jobs"), CFG,
+                     engines=("minhash", "simhash", "rules", "window"), enriched=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    assert ids == list(range(ids[0], ids[-1] + 1))
+    assert len(ids) <= JOB_BUDGET, f"{len(ids)} jobs"
